@@ -4,17 +4,32 @@ Near-duplicate detection yields PAIRS (LSH candidates verified by exact
 Jaccard — ``dedup.neardup_pipeline``); deduplication needs CLUSTERS
 (keep one doc per connected component of the pair graph). Spark has no
 built-in connected components, so :func:`connected_components`
-implements iterative min-label propagation as pure DataFrame ops:
+implements synchronous min-label propagation:
 
     label(v) <- min(label(v), min over neighbors u of label(u))
 
-repeated to a fixpoint. Each iteration is one shuffle join + one
-aggregation; convergence needs O(component diameter) rounds, and
-near-dup components are shallow (dozens of docs, diameter a few hops),
-so this is a handful of iterations regardless of corpus size. The
-driver-side loop only checks a scalar convergence count per round —
-data never leaves the executors; ``localCheckpoint`` truncates the
-growing lineage each round so plan size stays constant.
+repeated to a fixpoint, which needs O(component diameter) rounds;
+near-dup components are shallow (dozens of docs, diameter a few hops).
+
+Two execution paths, chosen per call from the symmetric edge frame's
+MEASURED row count (taken while it is checkpointed, so the switch costs
+no extra job):
+
+- ``_fixpoint_width(rows) == 1`` (at most ``_FIXPOINT_ROWS_PER_PARTITION``
+  = 2M rows; every bench-scale pair graph): the whole fixpoint runs in ONE
+  task (:func:`_in_one_task` — ``coalesce(1).mapInPandas``). The node keys
+  are factorized to sorted integer codes and the same synchronous rounds
+  replay in numpy. At this scale a fixpoint's cost is per-round Spark job
+  scheduling, not data, so this turns ~rounds x 1-2 driver jobs into one.
+- Larger frames run the distributed loop: each round is one shuffle join
+  + one aggregation on a plan whose width (:func:`_distribute`) is sized
+  from the same row count; the driver only reads a scalar change count per
+  round, and ``localCheckpoint`` truncates the lineage each round so plan
+  size stays constant.
+
+Both paths return the same rows and honour the same ``max_iter``
+contract. :func:`label_propagation` (community detection) takes the same
+switch through the same helper.
 
 For adversarial graphs with long chains (component diameter ~ n, where
 min-label needs O(n) rounds), :func:`connected_components_star`
@@ -28,12 +43,16 @@ output; pick by expected topology — near-dup doc clusters are shallow
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, Window, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 # Target rows per shuffle partition inside fixpoint loops: ~2M edge/label
 # rows ≈ 50-100 MB — the guide's 100 MB-1 GB shuffle-partition sizing,
 # derived from the MEASURED frame size rather than the session default
-# (which is sized for corpus-scale scans, not pair-scale fixpoints).
+# (which is sized for corpus-scale scans, not pair-scale fixpoints). A
+# frame that fits in one such partition runs its fixpoint in one task.
 _FIXPOINT_ROWS_PER_PARTITION = 2_000_000
 
 
@@ -55,16 +74,102 @@ def _distribute(df: DataFrame, width: int, *keys: str) -> DataFrame:
     (a session-global mutation that two concurrent fixpoints would clobber;
     per-plan state lets callers thread independent pipelines).
 
-    width == 1 (anything under 2M rows — every bench-scale pair graph)
-    coalesces to a SinglePartition frame: SinglePartition satisfies every
-    required distribution, so the loop's joins and aggregates plan with
-    ZERO exchanges and each round is one narrow single-task stage. Wider
-    frames get an explicit hash repartition on the loop key, which the
-    in-loop equi-joins and aggregates then reuse exchange-free; AQE stays
-    ON (skew-split still applies inside each round)."""
+    width == 1 coalesces to a SinglePartition frame: SinglePartition
+    satisfies every required distribution, so joins and aggregates on it
+    plan with ZERO exchanges. Wider frames get an explicit hash
+    repartition on ``keys``; an equi-join on those keys reuses it, but an
+    aggregate grouped on another column still shuffles (the min-label
+    loop joins on ``b`` and groups on ``a``: one exchange per round). AQE
+    stays ON (skew-split still applies inside each round)."""
     if width == 1:
         return df.coalesce(1)
     return df.repartition(width, *[F.col(k) for k in keys])
+
+
+def _symmetric(edges: DataFrame, src: str, dst: str,
+               distinct: bool = True) -> tuple[DataFrame, int]:
+    """Both directions of every edge as ``(a, b)``, NULL endpoints dropped
+    (NULL is not a node id), materialized ONCE and returned with its row
+    count.
+
+    The frame is re-read by every round, and its lineage embeds whatever
+    produced the edges (e.g. the whole LSH+Jaccard pipeline) — without the
+    checkpoint the edge computation re-runs per round. The count rides the
+    checkpoint's own job through an ``Observation``, so sizing the
+    fixpoint costs no separate count job."""
+    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+           .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+           .dropna())
+    if distinct:
+        sym = sym.distinct()
+    obs = Observation()
+    sym = (sym.observe(obs, F.count(F.lit(1)).alias("n"))
+           .localCheckpoint(eager=True))
+    return sym, obs.get["n"]
+
+
+def _in_one_task(sym: DataFrame, step, max_rounds: int) -> DataFrame:
+    """Run a synchronous label fixpoint over the whole edge frame ``sym``
+    ``(a, b)`` in ONE task and return ``(node, label, rounds)``.
+
+    The node keys are factorized with ``sort=True``, so code order is value
+    order (for strings, code-point order, which is Spark's UTF-8 binary
+    order): a label picked by min or by ascending tie-break on codes is the
+    one the distributed loop picks on values. Every node starts labelled
+    with itself; ``step(label, a, b)`` maps the label codes of one round to
+    the next and is applied until a round changes nothing or
+    ``max_rounds`` rounds have run. ``rounds`` (the same on every row) is
+    the round that changed nothing, or ``max_rounds + 1`` when none did —
+    the count the distributed min-label loop would have paid. An empty
+    ``sym`` yields no rows."""
+    key = sym.schema["a"].dataType
+    schema = StructType([StructField("node", key), StructField("label", key),
+                         StructField("rounds", IntegerType())])
+
+    def kernel(batches):
+        frames = list(batches)
+        if not frames:
+            return
+        e = pd.concat(frames, ignore_index=True)
+        codes, keys = pd.factorize(pd.concat([e["a"], e["b"]]), sort=True)
+        a, b = codes[:len(e)], codes[len(e):]
+        keys = np.asarray(keys)
+        label = np.arange(len(keys))
+        rounds = max_rounds + 1
+        for r in range(1, max_rounds + 1):
+            nxt = step(label, a, b)
+            if np.array_equal(nxt, label):
+                rounds = r
+                break
+            label = nxt
+        yield pd.DataFrame({"node": keys, "label": keys[label],
+                            "rounds": rounds})
+
+    return sym.coalesce(1).mapInPandas(kernel, schema)
+
+
+def _min_label_round(label, a, b):
+    """One min-label round on codes: each node takes the minimum of its
+    own label and its neighbours' labels."""
+    nxt = label.copy()
+    np.minimum.at(nxt, a, label[b])
+    return nxt
+
+
+def _majority_round(label, a, b):
+    """One label-propagation round on codes: each node takes the label most
+    frequent among its neighbours (every edge row is one vote), ties going
+    to the smallest label."""
+    n = len(label)
+    # (node, label) as one int64 key: n is at most the 2M one-task rows.
+    pair, votes = np.unique(a * n + label[b], return_counts=True)
+    node, lbl = pair // n, pair % n
+    first = np.lexsort((lbl, -votes, node))
+    node, lbl = node[first], lbl[first]
+    head = np.r_[True, node[1:] != node[:-1]]
+    nxt = label.copy()
+    nxt[node[head]] = lbl[head]
+    return nxt
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
@@ -73,30 +178,43 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     node id reachable from it (the canonical component representative).
 
     Returns ``(node, label)``. Deterministic: min is order-insensitive.
-    Raises if the fixpoint is not reached within ``max_iter`` rounds
-    (returning half-propagated labels would silently split components).
+    Edges with a NULL endpoint are ignored. Raises if the fixpoint is not
+    reached within ``max_iter`` rounds (returning half-propagated labels
+    would silently split components). Runs in one task up to 2M symmetric
+    edge rows, as a distributed loop above (module docstring).
     """
-    # Materialize ONCE: sym is re-joined every round, and its lineage embeds
-    # whatever produced the edges (e.g. the whole LSH+Jaccard pipeline) —
-    # without this the edge computation re-runs per iteration.
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-           .distinct()
-           .localCheckpoint(eager=True))
-    # One cheap count over the already-materialized RDD sizes every
-    # round's shuffles to the edge frame, not the session default.
-    width = _fixpoint_width(sym.count())
+    sym, n = _symmetric(edges, src, dst)
+    width = _fixpoint_width(n)
+    if width == 1:
+        # Lazy checkpoint + one max: the max is the materializing action,
+        # so the whole fixpoint and its convergence check cost ONE job.
+        out = _in_one_task(sym, _min_label_round, max_iter) \
+            .localCheckpoint(eager=False)
+        rounds = out.agg(F.max("rounds")).first()[0] or 1
+        labels = out.select("node", "label")
+    else:
+        labels, rounds = _min_label_loop(sym, width, max_iter)
+    if rounds > max_iter:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds — "
+            "component diameter exceeds the bound; raise max_iter")
+    return labels
+
+
+def _min_label_loop(sym: DataFrame, width: int,
+                    max_iter: int) -> tuple[DataFrame, int]:
+    """The distributed min-label fixpoint: returns the labels and the round
+    that changed nothing (``max_iter + 1`` if none did within the bound)."""
     # shuffle_hash on the loop join sides: a localCheckpoint output has no
-    # known partitioning, so without the hint AQE plans each bench-scale
-    # round as a BroadcastHashJoin whose broadcast exchange materializes as
-    # an EXTRA driver job per round (measured: 45 → 37 jobs on the
-    # embedding pair graph). At width > 1 the sides are hash-distributed on
-    # the join key already, and SHJ consumes that exchange-free where SMJ
-    # would add per-round sorts.
+    # known partitioning, so without the hint AQE plans each round as a
+    # BroadcastHashJoin whose broadcast exchange materializes as an EXTRA
+    # driver job per round (measured: 45 → 37 jobs on the embedding pair
+    # graph). The sides are hash-distributed on the join key already, and
+    # SHJ consumes that exchange-free where SMJ would add per-round sorts.
     sym_j = _distribute(sym, width, "b").hint("shuffle_hash")
     labels = (sym.select(F.col("a").alias("node")).distinct()
               .withColumn("label", F.col("node")))
-    for _ in range(max_iter):
+    for r in range(1, max_iter + 1):
         labels_r = _distribute(labels, width, "node")
         neigh = (sym_j.join(labels_r, sym_j["b"] == labels_r["node"])
                  .groupBy("a").agg(F.min("label").alias("nlabel"))
@@ -107,8 +225,7 @@ def connected_components(edges: DataFrame, src: str = "id_a",
         # Lazy checkpoint + count: the count is the materializing
         # action, so each round pays ONE Spark job (materialize+count
         # fused) instead of two (eager materialize, then a count over
-        # it) — at bench scale the fixpoint's cost is driver job
-        # scheduling, not data, and this halves it; results identical.
+        # it); results identical.
         step = (labels_r.join(neigh, labels_r["node"] == neigh["a"], "left")
                         .select(labels_r["node"],
                                 labels_r["label"].alias("old_label"),
@@ -121,10 +238,38 @@ def connected_components(edges: DataFrame, src: str = "id_a",
             F.col("label") != F.col("old_label")).count()
         labels = step.select("node", "label")
         if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
-        "component diameter exceeds the bound; raise max_iter")
+            return labels, r
+    return labels, max_iter + 1
+
+
+def label_propagation(edges: DataFrame, src: str = "id_a",
+                      dst: str = "id_b", rounds: int = 4) -> DataFrame:
+    """Synchronous label propagation (Raghavan et al. 2007): every node
+    starts labelled with itself, and each of ``rounds`` rounds gives every
+    node the label most frequent among its neighbours, ties going to the
+    smallest label. Edges are NOT deduplicated, so a repeated edge is a
+    repeated vote; NULL endpoints are dropped. Fixed rounds plus a total
+    tie order make the result a pure function of the edge list.
+
+    Returns ``(node, label)`` for every node of the graph. Takes the same
+    size switch as :func:`connected_components`: at most 2M symmetric edge
+    rows run in one task, larger graphs run one edge join + one (node,
+    label) count + one argmax window per round."""
+    sym, n = _symmetric(edges, src, dst, distinct=False)
+    if _fixpoint_width(n) == 1:
+        return _in_one_task(sym, _majority_round, rounds) \
+            .select("node", "label")
+    labels = (sym.select(F.col("a").alias("node")).distinct()
+              .withColumn("label", F.col("node")))
+    w = Window.partitionBy("a").orderBy(F.col("n").desc(), F.col("label"))
+    for _ in range(rounds):
+        votes = (sym.join(labels.withColumnRenamed("node", "b"), "b")
+                 .groupBy("a", "label").agg(F.count(F.lit(1)).alias("n")))
+        labels = (votes.withColumn("rk", F.row_number().over(w))
+                  .filter(F.col("rk") == 1)
+                  .select(F.col("a").alias("node"), "label")
+                  .localCheckpoint(eager=True))
+    return labels
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -289,10 +434,7 @@ def triangle_count(edges: DataFrame, src: str = "id_a",
     # this the edge computation re-runs per reference (measured: the
     # un-checkpointed plan re-inlined the near-dup pipeline 8x, 201
     # exchanges vs 2 after).
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-           .distinct()
-           .localCheckpoint(eager=True))
+    sym, _ = _symmetric(edges, src, dst)
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     ranked = sym.join(deg.withColumnRenamed("a", "a_k")
                          .withColumnRenamed("deg", "deg_a"),
@@ -340,11 +482,8 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 8,
 
     Returns (node, deg) for surviving nodes with their in-core degree.
     """
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-           .distinct()
-           .localCheckpoint(eager=True))
-    width = _fixpoint_width(sym.count())
+    sym, n = _symmetric(edges, src, dst)
+    width = _fixpoint_width(n)
     for _ in range(rounds):
         sym_r = _distribute(sym, width, "a")
         deg = sym_r.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
@@ -383,15 +522,12 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, rounds: int = 3,
 
     Returns (node, hop) with hop 0 for the seeds themselves.
     """
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-           .distinct()
-           .localCheckpoint(eager=True))
+    sym, n = _symmetric(edges, src, dst)
     frontier = (seeds.select(F.col(id_col).cast("bigint").alias("node"))
                 .distinct().localCheckpoint(eager=True))
     layers = [frontier.select("node", F.lit(0).cast("int").alias("hop"))]
     visited = frontier
-    width = _fixpoint_width(sym.count())
+    width = _fixpoint_width(n)
     sym_a = _distribute(sym, width, "a")
     for r in range(1, rounds + 1):
         # Lazy: the loop is a FIXED number of rounds (no per-round

@@ -1186,32 +1186,17 @@ def x_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over the
     persisted near-dup graph — community detection, the coarser cousin
     of connected components (CC answers "reachable?", LPA groups by
-    DENSITY of mutual duplication). Deterministic variant: 4 synchronous
-    rounds, each node adopts the most frequent label among its neighbors
-    with ties (count desc, label asc), isolated from update-order by the
-    synchronous schedule; fixed rounds + total tie order make the
-    unrolled-CTE DuckDB replay exact. Each round is one edge join + one
-    (node, label) count + one argmax window — the same per-round shape
-    as PageRank, edges scanned from the once-written parquet. Output:
-    (doc_id, community) for every node of the pair graph."""
-    from pyspark.sql import Window
-    edges = _edges(spark, sf_dir).select("id_a", "id_b")
-    sym = (edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-           .unionByName(edges.select(F.col("id_b").alias("a"),
-                                     F.col("id_a").alias("b")))
-           .localCheckpoint(eager=True))
-    labels = sym.select(F.col("a").alias("node")).distinct() \
-                .withColumn("lbl", F.col("node"))
-    for _ in range(4):
-        w = Window.partitionBy("a").orderBy(F.col("n").desc(), F.col("lbl"))
-        votes = (sym.join(labels.withColumnRenamed("node", "b"), "b")
-                 .groupBy("a", "lbl").agg(F.count(F.lit(1)).alias("n")))
-        labels = (votes.withColumn("rk", F.row_number().over(w))
-                  .filter(F.col("rk") == 1)
-                  .select(F.col("a").alias("node"), "lbl"))
-        labels = labels.localCheckpoint(eager=True)
+    DENSITY of mutual duplication). Deterministic variant
+    (:func:`graph.label_propagation`): 4 synchronous rounds, each node
+    adopts the most frequent label among its neighbors with ties (count
+    desc, label asc); fixed rounds + total tie order make the
+    unrolled-CTE DuckDB replay exact. The bench-scale graph runs all four
+    rounds in one task. Output: (doc_id, community) for every node of the
+    pair graph."""
+    from .functions import graph
+    labels = graph.label_propagation(_edges(spark, sf_dir), rounds=4)
     return (labels.select(F.col("node").cast("bigint").alias("doc_id"),
-                          F.col("lbl").cast("bigint").alias("community"))
+                          F.col("label").cast("bigint").alias("community"))
             .orderBy("doc_id"))
 
 

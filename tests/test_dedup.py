@@ -91,12 +91,136 @@ def test_connected_components_basic(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_raises_when_not_converged(spark):
+def _on_path(monkeypatch, path, sym_rows):
+    """Route graph fixpoints over a ``sym_rows``-row symmetric edge frame to
+    ``path``: 'one_task' is the default for any small graph; 'loop' lowers
+    the one-task bound so the distributed loop runs at width 3 (a bound of
+    1 would mean one partition per row)."""
+    from flink_realtime_data_eng_spark.functions import graph
+    if path == "loop":
+        monkeypatch.setattr(graph, "_FIXPOINT_ROWS_PER_PARTITION",
+                            max(1, sym_rows // 3))
+
+
+def _cc_reference(pairs):
+    """Minimum node reachable from every node; NULL endpoints ignored."""
+    adj = {}
+    for a, b in pairs:
+        if a is not None and b is not None:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    out = {}
+    for start in adj:
+        if start in out:
+            continue
+        comp, todo = {start}, [start]
+        while todo:
+            for u in adj[todo.pop()] - comp:
+                comp.add(u)
+                todo.append(u)
+        out.update(dict.fromkeys(comp, min(comp)))
+    return out
+
+
+def _random_pairs():
+    """Seeded ~degree-2 graph: a mix of chains, cycles and singleton pairs."""
+    import random
+    rng = random.Random(42)
+    pairs = [(rng.randrange(500), rng.randrange(500)) for _ in range(600)]
+    return [(a, b) for a, b in pairs if a != b]
+
+
+_CC_CASES = {
+    "random": ("long", _random_pairs()),
+    # diameter 19, near the default max_iter=25
+    "chain20": ("long", [(i + 1, i) for i in range(19)]),
+    # Spark orders strings by UTF-8 bytes, pandas by code point: the same
+    # order, even where UTF-16 (Java's String order) disagrees —
+    # U+FF5A 'ｚ' < U+1D538 '𝔸'.
+    "strings": ("string", [("b", "B"), ("B", "é"), ("é", "Zoë"),
+                           ("ä", "a"), ("𝔸", "ｚ"), ("ß", "Ω"),
+                           ("Ω", "ω"), (None, "q"), ("q", "Q")]),
+    "empty": ("long", []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+@pytest.mark.parametrize("path", ["one_task", "loop"])
+def test_connected_components_paths_match_reference(spark, monkeypatch,
+                                                    path, case):
+    """The one-task kernel and the distributed loop give the same labels
+    as a plain-Python reference, on every input shape."""
+    from flink_realtime_data_eng_spark.functions.graph import connected_components
+    key, pairs = _CC_CASES[case]
+    edges = spark.createDataFrame(pairs, f"id_a {key}, id_b {key}")
+    want = _cc_reference(pairs)
+    _on_path(monkeypatch, path, 2 * len(pairs))
+    got = {r["node"]: r["label"] for r in connected_components(edges).collect()}
+    assert got == want
+
+
+@pytest.mark.parametrize("path", ["one_task", "loop"])
+def test_connected_components_raises_when_not_converged(spark, monkeypatch,
+                                                        path):
     from flink_realtime_data_eng_spark.functions.graph import connected_components
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long")
+    _on_path(monkeypatch, path, 10)
     with pytest.raises(RuntimeError, match="converge"):
         connected_components(edges, max_iter=1)
+    # a bound of exactly the rounds needed (5 changing + 1 quiet) passes
+    got = connected_components(edges, max_iter=6).collect()
+    assert {r["label"] for r in got} == {1}
+
+
+def test_connected_components_small_graph_runs_in_three_jobs(spark):
+    """A small graph converges in ONE task whatever its diameter: one job
+    pair materializes and counts the symmetric edges, one runs the whole
+    fixpoint and reads its round count — not a job or two per round."""
+    from flink_realtime_data_eng_spark.functions.graph import connected_components
+    edges = spark.createDataFrame([(i, i + 1) for i in range(19)],
+                                  "id_a long, id_b long")
+    sc = spark.sparkContext
+    group = "cc-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def _lpa_reference(pairs, rounds):
+    """Synchronous LPA: every edge row is a vote, ties to the smallest
+    label."""
+    from collections import Counter
+    nbrs = {}
+    for a, b in pairs:
+        nbrs.setdefault(a, []).append(b)
+        nbrs.setdefault(b, []).append(a)
+    label = {v: v for v in nbrs}
+    for _ in range(rounds):
+        label = {v: min(Counter(label[u] for u in us).items(),
+                        key=lambda kv: (-kv[1], kv[0]))[0]
+                 for v, us in nbrs.items()}
+    return label
+
+
+@pytest.mark.parametrize("path", ["one_task", "loop"])
+def test_label_propagation_duplicate_edges_and_ties(spark, monkeypatch, path):
+    """Repeated edges are repeated votes, equal votes go to the smallest
+    label, and the 7-8 pair swaps labels every round (synchronous LPA
+    oscillates on it), so neither path may stop early."""
+    from flink_realtime_data_eng_spark.functions.graph import label_propagation
+    pairs = [(1, 2), (1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (5, 6),
+             (6, 4), (4, 5), (7, 8), (9, 3), (9, 4)]
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    _on_path(monkeypatch, path, 2 * len(pairs))
+    for rounds in (3, 4):
+        got = {r["node"]: r["label"]
+               for r in label_propagation(edges, rounds=rounds).collect()}
+        assert got == _lpa_reference(pairs, rounds)
+    assert got[7] == 7 and got[8] == 8
 
 
 def test_connected_components_star_basic(spark):
@@ -127,15 +251,11 @@ def test_connected_components_star_long_path(spark):
 
 
 def test_connected_components_star_matches_min_label(spark):
-    """Both algorithms must produce identical labelings on a random graph
-    (seeded, ~degree-2: a mix of chains, cycles and singleton pairs)."""
-    import random
+    """Both algorithms must produce identical labelings on the seeded
+    random graph."""
     from flink_realtime_data_eng_spark.functions.graph import (
         connected_components, connected_components_star)
-    rng = random.Random(42)
-    pairs = [(rng.randrange(500), rng.randrange(500)) for _ in range(600)]
-    pairs = [(a, b) for a, b in pairs if a != b]
-    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    edges = spark.createDataFrame(_random_pairs(), "id_a long, id_b long")
     a = {r["node"]: r["label"] for r in connected_components(edges).collect()}
     b = {r["node"]: r["label"]
          for r in connected_components_star(edges).collect()}
