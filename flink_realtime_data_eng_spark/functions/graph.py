@@ -43,9 +43,11 @@ output; pick by expected topology — near-dup doc clusters are shallow
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 # Target rows per shuffle partition inside fixpoint loops: ~2M edge/label
@@ -54,6 +56,9 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 # (which is sized for corpus-scale scans, not pair-scale fixpoints). A
 # frame that fits in one such partition runs its fixpoint in one task.
 _FIXPOINT_ROWS_PER_PARTITION = 2_000_000
+
+# Unique observed-metric names for _symmetric's edge counts.
+_OBSERVED = itertools.count()
 
 
 def _fixpoint_width(n_rows: int) -> int:
@@ -95,17 +100,21 @@ def _symmetric(edges: DataFrame, src: str, dst: str,
     The frame is re-read by every round, and its lineage embeds whatever
     produced the edges (e.g. the whole LSH+Jaccard pipeline) — without the
     checkpoint the edge computation re-runs per round. The count rides the
-    checkpoint's own job through an ``Observation``, so sizing the
-    fixpoint costs no separate count job."""
+    checkpoint's own job as an observed metric, so sizing the fixpoint
+    costs no separate count job. The metric is read from the checkpointed
+    plan's accumulators once the job returns, not through an
+    ``Observation``: that waits, with no timeout, for a listener-bus event
+    the bus may deliver late or drop under load."""
     sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
            .dropna())
     if distinct:
         sym = sym.distinct()
-    obs = Observation()
-    sym = (sym.observe(obs, F.count(F.lit(1)).alias("n"))
-           .localCheckpoint(eager=True))
-    return sym, obs.get["n"]
+    name = f"graph_symmetric_{next(_OBSERVED)}"
+    observed = sym.observe(name, F.count(F.lit(1)).alias("n"))
+    sym = observed.localCheckpoint(eager=True)
+    n = observed._jdf.queryExecution().observedMetrics().apply(name)
+    return sym, n.getLong(0)
 
 
 def _in_one_task(sym: DataFrame, step, max_rounds: int) -> DataFrame:

@@ -186,7 +186,12 @@ def test_connected_components_small_graph_runs_in_three_jobs(spark):
     try:
         connected_components(edges)
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    # the status tracker is fed by the async listener bus: let it catch
+    # up (bounded) so a lagging bus cannot hide jobs from the count
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
