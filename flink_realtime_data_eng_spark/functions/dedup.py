@@ -399,27 +399,17 @@ def simhash(df: DataFrame, bits: int = 32, text_col: str = "text",
 
 def neardup_clusters(df: DataFrame, num_hashes: int = 16, bands: int = 4,
                      n: int = 3, threshold: float = 0.8,
-                     text_col: str = "text", id_col: str = "doc_id",
-                     cc_algorithm: str = "min_label") -> DataFrame:
+                     text_col: str = "text",
+                     id_col: str = "doc_id") -> DataFrame:
     """Near-dup DEDUP, end to end: LSH candidates → exact-Jaccard verify →
     connected components of the surviving pair graph. Returns
     ``(doc_id, cluster_id)`` for every doc that has at least one near-dup;
     ``cluster_id`` is the smallest doc_id in the component (keep it, drop
-    the rest — the standard keep-one policy).
-
-    ``cc_algorithm``: 'min_label' (default; O(diameter) rounds, fastest on
-    the shallow components near-dup graphs produce) or 'star' (alternating
-    large/small-star, O(log² n) rounds — pick for adversarial long-chain
-    topologies). Both return identical labelings."""
-    from .graph import connected_components, connected_components_star
-    if cc_algorithm not in ("min_label", "star"):
-        raise ValueError(f"cc_algorithm must be 'min_label' or 'star', "
-                         f"got {cc_algorithm!r}")
+    the rest — the standard keep-one policy)."""
+    from .graph import connected_components
     pairs = neardup_pipeline(df, num_hashes, bands, n, threshold,
                              text_col, id_col)
-    cc_fn = (connected_components if cc_algorithm == "min_label"
-             else connected_components_star)
-    cc = cc_fn(pairs, src="id_a", dst="id_b")
+    cc = connected_components(pairs, src="id_a", dst="id_b")
     return cc.select(F.col("node").alias(id_col),
                      F.col("label").alias("cluster_id"))
 

@@ -31,14 +31,11 @@ Both paths return the same rows and honour the same ``max_iter``
 contract. :func:`label_propagation` (community detection) takes the same
 switch through the same helper.
 
-For adversarial graphs with long chains (component diameter ~ n, where
-min-label needs O(n) rounds), :func:`connected_components_star`
-implements the alternating large-star/small-star algorithm [Kiveris et
-al., "Connected Components in MapReduce and Beyond", SoCC 2014], which
-converges in O(log^2 n) rounds regardless of diameter, behind the same
-edge-list contract. Both return the same (node, min-reachable-label)
-output; pick by expected topology — near-dup doc clusters are shallow
-(min-label wins on constant factors), social/citation graphs are not.
+A chain longer than ``max_iter`` hops raises ``RuntimeError`` rather
+than returning a half-converged labeling. Below 2M rows a round costs
+nothing extra (it is one numpy pass inside the single task), so only the
+round bound, not cost, limits min-label on long chains; raise
+``max_iter`` for such graphs.
 """
 
 from __future__ import annotations
@@ -281,94 +278,6 @@ def label_propagation(edges: DataFrame, src: str = "id_a",
     return labels
 
 
-def _large_star(sym: DataFrame) -> DataFrame:
-    """Large-star round: every node connects its STRICTLY LARGER neighbors
-    to the minimum of its closed neighborhood. Input/output are symmetric-
-    free directed edge lists (a, b); output edges point larger -> smaller."""
-    mins = (sym.groupBy("a").agg(F.min("b").alias("nmin"))
-               .select("a", F.least("a", "nmin").alias("m")))
-    return (sym.join(mins, "a")
-               .filter(F.col("b") > F.col("a"))
-               .select(F.col("b").alias("a"), F.col("m").alias("b"))
-               .filter(F.col("a") != F.col("b"))
-               .distinct())
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star round: orient each edge larger -> smaller, then every
-    node connects all its smaller neighbors (and itself) to their minimum."""
-    o = (edges.select(F.greatest("a", "b").alias("a"),
-                      F.least("a", "b").alias("b"))
-              .filter(F.col("a") != F.col("b"))
-              .distinct())
-    mins = o.groupBy("a").agg(F.min("b").alias("m"))
-    return (o.join(mins, "a")
-             .select(F.col("b").alias("a"), F.col("m").alias("b"))
-             .union(mins.select("a", F.col("m").alias("b")))
-             .filter(F.col("a") != F.col("b"))
-             .distinct())
-
-
-def connected_components_star(edges: DataFrame, src: str = "id_a",
-                              dst: str = "id_b",
-                              max_iter: int = 50) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    [Kiveris et al., SoCC 2014]: O(log^2 n) rounds independent of
-    component diameter — the scale path for adversarial long-chain graphs
-    where :func:`connected_components`'s min-label propagation would need
-    O(diameter) rounds.
-
-    Same contract as :func:`connected_components`: returns ``(node,
-    label)`` with label = minimum node id in the component; raises rather
-    than returning a half-converged labeling. Each round is a bounded
-    number of hash shuffles on the (shrinking) edge list; the driver sees
-    only a per-round scalar, and ``localCheckpoint`` keeps plan size
-    constant.
-    """
-    e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-              .filter(F.col("a") != F.col("b"))
-              .distinct()
-              .localCheckpoint(eager=True))
-    # Original node set, kept for the final labeling: star contraction may
-    # drop a center from the edge list's left side entirely.
-    nodes = (e.select(F.col("a").alias("node"))
-              .union(e.select(F.col("b").alias("node")))
-              .distinct()
-              .localCheckpoint(eager=True))
-    e_count = e.count()
-    width = _fixpoint_width(e_count)
-    for _ in range(max_iter):
-        # Width imposed BEFORE the distinct: repartition(width, a, b)
-        # satisfies the distinct aggregate's required distribution, so the
-        # round's first shuffle lands directly at the fixpoint width (and
-        # at width 1 the whole round plans exchange-free).
-        sym = _distribute(
-            e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))),
-            width, "a", "b").distinct()
-        # Lazy checkpoint: the convergence count below is the
-        # materializing action (one job instead of materialize+count),
-        # and the previous round's count is carried in ``e_count`` so
-        # each round pays ONE count, not two.
-        nxt = _small_star(_large_star(sym)).localCheckpoint(eager=False)
-        nxt_count = nxt.count()
-        # Converged when the edge set is unchanged (both are distinct
-        # sets, so equal counts + empty difference <=> equality).
-        if nxt_count == e_count and nxt.exceptAll(e).limit(1).count() == 0:
-            e = nxt
-            break
-        e, e_count = nxt, nxt_count
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds; raise max_iter")
-    # At the fixpoint the graph is a set of stars centered at component
-    # minima: orient edges larger -> smaller and read labels off directly.
-    stars = e.select(F.greatest("a", "b").alias("node"),
-                     F.least("a", "b").alias("label")).distinct()
-    return (nodes.join(stars, "node", "left")
-                 .select("node", F.coalesce("label", "node").alias("label")))
-
-
 def pagerank(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
              iterations: int = 5, scale: int = 10 ** 9,
              damp_num: int = 17, damp_den: int = 20) -> DataFrame:
@@ -394,15 +303,14 @@ def pagerank(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
 
     Output: (node, rank_i9) with rank at the ``scale`` fixed point.
     """
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-           .distinct())
+    sym, n_sym = _symmetric(edges, src, dst)
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     sym_deg = sym.join(deg, "a").localCheckpoint(eager=True)
     base = scale * (damp_den - damp_num) // damp_den
     scores = (sym_deg.select(F.col("a").alias("node")).distinct()
               .withColumn("score", F.lit(scale).cast("bigint")))
-    width = _fixpoint_width(sym_deg.count())
+    # sym_deg has exactly one row per sym row (every a has a degree).
+    width = _fixpoint_width(n_sym)
     sym_deg_r = _distribute(sym_deg, width, "a")
     for _ in range(iterations):
         scores_r = _distribute(scores, width, "node")

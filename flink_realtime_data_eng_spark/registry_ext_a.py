@@ -42,6 +42,7 @@ from .registry_ops import (  # noqa: F401
 from .registry_llm import (  # noqa: F401
     _edges,
 )
+from .artifacts import cached_artifact
 from .registry_catalog import (  # noqa: F401
     _CMS_H,
     _COSINE_Q,
@@ -993,26 +994,23 @@ def _events_csv_dir_flush_users(spark: SparkSession, sf_dir: str) -> str:
     machines need a per-key close signal, unlike the global-watermark
     sentinel of _events_csv_dir_flush. Base part-files hardlinked."""
     import os
-    base = _events_csv_dir(spark, sf_dir)
-    out = base + "_flush_users"
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
+
+    def build(scratch):
         import duckdb
         users = [r[0] for r in duckdb.sql(
             f"SELECT DISTINCT user_id FROM '{sf_dir}/events.parquet' "
             "ORDER BY user_id").fetchall()]
-        os.makedirs(out, exist_ok=True)
+        base = _events_csv_dir(spark, sf_dir)
         for f in os.listdir(base):
             if f.endswith(".csv"):
-                dst = os.path.join(out, f)
-                if not os.path.exists(dst):
-                    os.link(os.path.join(base, f), dst)
-        with open(os.path.join(out, "zz_flush.csv"), "w") as fh:
+                os.link(os.path.join(base, f), os.path.join(scratch, f))
+        with open(os.path.join(scratch, "zz_flush.csv"), "w") as fh:
             for i, u in enumerate(users):
                 fh.write(f"{10**9 + i},{u},__flush__,{_FLUSH_TS_MS}\n")
-        with open(marker, "w"):
-            pass
-    return out
+    return cached_artifact("events_csv_flush_users",
+                           [os.path.join(sf_dir, "events.parquet")], None,
+                           (_events_csv_dir_flush_users, _events_csv_dir),
+                           build)
 
 
 def x_dynsession_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1430,11 +1428,10 @@ def x_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources import jsonl_read
     d = _docs(spark, sf_dir).select("doc_id", "text", "lang", "source",
                                     "n_chars")
-    base = _events_csv_dir(spark, sf_dir)  # reuse the per-sf cache root
-    out = base + "_docs_jsonl"
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        d.write.mode("overwrite").json(out)
+    out = cached_artifact(
+        "docs_jsonl", [os.path.join(sf_dir, "documents.parquet")], None,
+        (x_jsonl_roundtrip,),
+        lambda scratch: d.write.mode("overwrite").json(scratch))
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
@@ -1619,14 +1616,16 @@ def x_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicitly once it stabilizes so the scan skips reconciliation."""
     import os
     d = _docs(spark, sf_dir)
-    base = _events_csv_dir(spark, sf_dir)
-    out = base + "_docs_evo"
-    if not os.path.exists(os.path.join(out, "gen2", "_SUCCESS")):
+
+    def build(scratch):
         half = F.col("doc_id") % 2 == 0
         (d.filter(half).select("doc_id", "lang")
-         .write.mode("overwrite").parquet(os.path.join(out, "gen1")))
+         .write.mode("overwrite").parquet(os.path.join(scratch, "gen1")))
         (d.filter(~half).select("doc_id", "lang", "source")
-         .write.mode("overwrite").parquet(os.path.join(out, "gen2")))
+         .write.mode("overwrite").parquet(os.path.join(scratch, "gen2")))
+    out = cached_artifact(
+        "docs_evo", [os.path.join(sf_dir, "documents.parquet")], None,
+        (x_schema_evolution,), build)
     return (spark.read.option("mergeSchema", "true")
             .parquet(os.path.join(out, "gen1"), os.path.join(out, "gen2")))
 
@@ -2522,15 +2521,10 @@ def _events_csv_dir_arrival2(spark: SparkSession, sf_dir: str) -> str:
     = second half, mtimes pinned so the file source forms batch 0 from a
     and batch 1 from b under maxFilesPerTrigger=1 — the deterministic
     two-batch replay that makes late-data capture oracle-checkable."""
-    import hashlib
     import os
     src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:arr2"
-                      .encode()).hexdigest()[:12]
-    out = os.path.join(_tempfile.gettempdir(), f"frde_events_arr2_{tag}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
+
+    def build(scratch):
         import duckdb
         rows = duckdb.sql(f"""
             SELECT event_id, user_id, event_type, epoch_ms(ts) AS ts_ms
@@ -2541,19 +2535,17 @@ def _events_csv_dir_arrival2(spark: SparkSession, sf_dir: str) -> str:
                         % 7200000 - 3600000),
                      event_id
         """).fetchall()
-        os.makedirs(out, exist_ok=True)
         half = (len(rows) + 1) // 2
         for name, chunk, mt in [("a.csv", rows[:half], 1_700_000_000),
                                 ("b.csv", rows[half:], 1_700_000_001)]:
-            p = os.path.join(out, name)
+            p = os.path.join(scratch, name)
             with open(p, "w") as fh:
                 for r in chunk:
                     fh.write(",".join("" if v is None else str(v)
                                       for v in r) + "\n")
             os.utime(p, (mt, mt))
-        with open(marker, "w"):
-            pass
-    return out
+    return cached_artifact("events_arr2", [src], None,
+                           (_events_csv_dir_arrival2,), build)
 
 
 def x_late_capture_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

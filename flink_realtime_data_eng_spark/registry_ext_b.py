@@ -33,18 +33,16 @@ from .registry_core import (  # noqa: F401
 )
 from .registry_ops import (  # noqa: F401
     _EVENTS_CSV_SCHEMA,
-    _code_tag,
-    _events_csv_dir,
     _events_csv_dir_flush,
     _run_to_memory,
     _run_to_parquet,
     _stream_events,
-    _tempfile,
 )
 from .registry_llm import (  # noqa: F401
     _edges,
     x_corpus_filter,
 )
+from .artifacts import cached_artifact
 from .registry_catalog import (  # noqa: F401
     _COSINE_Q,
     _QF_TOKS,
@@ -132,29 +130,20 @@ def _policy_tables_dir(spark: SparkSession, sf_dir: str) -> str:
       duplication, the Dolma-style boilerplate rule); the comparison is
       integer (2*n_kept < n_chunks), hash-stable cross-engine
     """
-    import hashlib
     import os
-    src = os.path.join(sf_dir, "documents.parquet")
-    esrc = os.path.join(sf_dir, "embeddings.parquet")
-    st, se = os.stat(src), os.stat(esrc)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{se.st_size}:{se.st_mtime_ns}"
-        f":{os.getuid()}:policy_v1:{_code_tag(dedup.neardup_keep, similarity.semdedup_keep, dedup.containment_pairs, dedup.paragraph_dedup)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(_tempfile.gettempdir(), f"frde_policy_{tag}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
+
+    def build(scratch):
         docs = _docs(spark, sf_dir)
-        dedup.neardup_keep(docs).select("doc_id") \
-            .write.mode("overwrite").parquet(os.path.join(out, "text_keep"))
+        dedup.neardup_keep(docs).select("doc_id").write.mode("overwrite") \
+            .parquet(os.path.join(scratch, "text_keep"))
         similarity.semdedup_keep(_emb(spark, sf_dir), threshold=0.3,
                                  num_planes=8) \
             .select(F.col("vec_id").alias("doc_id")) \
-            .write.mode("overwrite").parquet(os.path.join(out, "emb_keep"))
+            .write.mode("overwrite").parquet(os.path.join(scratch, "emb_keep"))
         dedup.containment_pairs(docs, n=3, threshold=0.5) \
             .select(F.col("id_b").alias("doc_id")).distinct() \
             .write.mode("overwrite") \
-            .parquet(os.path.join(out, "containment_drop"))
+            .parquet(os.path.join(scratch, "containment_drop"))
         (docs.select("doc_id", F.expr(
                 "CAST((size(split(text, ' ')) + 7) DIV 8 AS BIGINT)")
                 .alias("n_chunks"))
@@ -163,10 +152,12 @@ def _policy_tables_dir(spark: SparkSession, sf_dir: str) -> str:
              .filter(F.col("n_kept") * 2 < F.col("n_chunks"))
              .select("doc_id")
              .write.mode("overwrite")
-             .parquet(os.path.join(out, "paragraph_drop")))
-        with open(marker, "w"):
-            pass
-    return out
+             .parquet(os.path.join(scratch, "paragraph_drop")))
+    return cached_artifact(
+        "policy", [os.path.join(sf_dir, "documents.parquet"),
+                   os.path.join(sf_dir, "embeddings.parquet")], None,
+        (_policy_tables_dir, dedup.neardup_keep, similarity.semdedup_keep,
+         dedup.containment_pairs, dedup.paragraph_dedup), build)
 
 
 def x_joint_dedup_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,15 +313,9 @@ def _bucketed_tpch_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     first call per dataset pays the bucketing shuffle and persists the
     files; later SESSIONS re-attach the existing location to their
     in-memory catalog (register_bucketed) instead of rewriting."""
-    import hashlib
     import os
-    from .operators.bucketing import register_bucketed, write_bucketed
-    so = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    sl = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    tag = hashlib.md5(
-        f"{sf_dir}:{so.st_size}:{so.st_mtime_ns}:{sl.st_size}"
-        f":{sl.st_mtime_ns}:{os.getuid()}:bkt_v2".encode()).hexdigest()[:12]
-    base = os.path.join(_tempfile.gettempdir(), f"frde_bkt_{tag}")
+    from .operators.bucketing import (drop_bucketed, register_bucketed,
+                                      write_bucketed)
     specs = [
         ("orders",
          load_table(_prep(spark), sf_dir, "orders")
@@ -340,17 +325,26 @@ def _bucketed_tpch_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
          .select("l_orderkey", "l_extendedprice", "l_discount"),
          "l_orderkey"),
     ]
+
+    def build(scratch):
+        # bucketBy only writes through saveAsTable: write under a
+        # throwaway table name, then drop it (the files stay — the
+        # table is EXTERNAL) so the catalog never points into scratch.
+        for name, df, key in specs:
+            write_bucketed(df, f"frde_bkt_build_{name}", 8, key,
+                           path=os.path.join(scratch, name))
+            drop_bucketed(spark, f"frde_bkt_build_{name}")
+    base = cached_artifact(
+        "bkt", [os.path.join(sf_dir, "orders.parquet"),
+                os.path.join(sf_dir, "lineitem.parquet")], None,
+        (_bucketed_tpch_tables, write_bucketed), build)
+    tag = base.rsplit("_", 1)[1]
     names = []
     for name, df, key in specs:
         tbl = f"frde_bkt_{name}_{tag}"
-        loc = os.path.join(base, name)
-        if not spark.catalog.tableExists(tbl):
-            if os.path.exists(os.path.join(loc, "_SUCCESS")):
-                ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                                for f in df.schema.fields)
-                register_bucketed(spark, tbl, loc, ddl, 8, key)
-            else:
-                write_bucketed(df, tbl, 8, key, path=loc)
+        ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                        for f in df.schema.fields)
+        register_bucketed(spark, tbl, os.path.join(base, name), ddl, 8, key)
         names.append(tbl)
     return names[0], names[1]
 
@@ -776,11 +770,10 @@ def x_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     d = _docs(spark, sf_dir).select("doc_id", "text", "lang", "source",
                                     "n_chars")
-    base = _events_csv_dir(spark, sf_dir)  # reuse the per-sf cache root
-    out = base + "_docs_orc"
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        d.write.mode("overwrite").orc(out)
+    out = cached_artifact(
+        "docs_orc", [os.path.join(sf_dir, "documents.parquet")], None,
+        (x_orc_roundtrip,),
+        lambda scratch: d.write.mode("overwrite").orc(scratch))
     return (spark.read.schema(d.schema).orc(out)
             .select("doc_id", "text", "lang", "source", "n_chars"))
 
@@ -860,14 +853,18 @@ def x_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     d = _docs(spark, sf_dir).select("doc_id", "text", "lang", "source",
                                     "n_chars")
-    base = _events_csv_dir(spark, sf_dir)  # per-sf cache root
-    frag, compacted = base + "_docs_frag", base + "_docs_compact"
-    if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
+    from .operators.bucketing import compact_files
+
+    def build(scratch):
+        frag = os.path.join(scratch, "frag")
         d.repartition(64).write.mode("overwrite").parquet(frag)
-        from .operators.bucketing import compact_files
-        compact_files(spark, frag, compacted,
+        compact_files(spark, frag, os.path.join(scratch, "compacted"),
                       target_file_bytes=8 * 1024 * 1024)
-    return (spark.read.schema(d.schema).parquet(compacted)
+    out = cached_artifact(
+        "docs_compact", [os.path.join(sf_dir, "documents.parquet")], None,
+        (x_compaction_roundtrip, compact_files), build)
+    return (spark.read.schema(d.schema)
+            .parquet(os.path.join(out, "compacted"))
             .select("doc_id", "text", "lang", "source", "n_chars"))
 
 
@@ -1464,26 +1461,20 @@ def _quality_verdict_dir(spark: SparkSession, sf_dir: str) -> str:
     once per corpus version and every downstream composition reads the
     (doc_id, flags, keep) parquet. The inline-scan cost stays measured
     by its own registered row, x_corpus_filter."""
-    import hashlib
     import os
     from .functions import pii
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    # Tag covers the builder AND the helpers that determine the persisted
-    # columns — text.tokens (n_tokens) and the PII pattern table (fail
-    # flags): a tokenizer or pattern change must invalidate the artifact,
-    # else a stale verdict is served against a freshly updated oracle
-    # (r11 ADVICE, the _dsir_weights_dir staleness class).
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:quality_v1"
-        f":{_code_tag(filtering.corpus_filter, filtering._rule_flags, text.tokens)}"
-        f":{sorted(pii.PII_PATTERNS.items())!r}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(_tempfile.gettempdir(), f"frde_quality_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        filtering.corpus_filter(_docs(spark, sf_dir)) \
-            .write.mode("overwrite").parquet(out)
-    return out
+    # The key covers the builder AND the helpers that determine the
+    # persisted columns — text.tokens (n_tokens) and the PII pattern table
+    # (fail flags): a tokenizer or pattern change must invalidate the
+    # artifact, else a stale verdict is served against a freshly updated
+    # oracle.
+    return cached_artifact(
+        "quality", [os.path.join(sf_dir, "documents.parquet")],
+        sorted(pii.PII_PATTERNS.items()),
+        (_quality_verdict_dir, filtering.corpus_filter, filtering._rule_flags,
+         text.tokens),
+        lambda scratch: filtering.corpus_filter(_docs(spark, sf_dir))
+        .write.mode("overwrite").parquet(scratch))
 
 
 def x_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2601,23 +2592,19 @@ def _pq_index_dir(spark: SparkSession, sf_dir: str) -> str:
     and ``books/`` (the 1-row m x ks x d codebook artifact). The
     ``_edges_parquet_dir`` pattern applied to ANN: at 100 TB the nightly
     index job trains + encodes once and every retrieval query ADC-scans
-    the code table, never the raw embeddings. ``books/`` is written last
-    so its _SUCCESS marks the whole index complete."""
-    import hashlib
+    the code table, never the raw embeddings."""
     import os
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:pq_m16k32i2t512"
-        f":{_code_tag(similarity.pq_train_books, similarity.pq_encode)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(_tempfile.gettempdir(), f"frde_pqidx_{tag}")
-    if not os.path.exists(os.path.join(out, "books", "_SUCCESS")):
+
+    def build(scratch):
         emb = _emb(spark, sf_dir)
         books = similarity.pq_train_books(emb, m=16, ks=32, iters=2,
                                           train_max=512)
         similarity.pq_encode(emb, books).write.mode("overwrite").parquet(
-            os.path.join(out, "codes"))
+            os.path.join(scratch, "codes"))
         similarity._pq_books_df(spark, books).write.mode(
-            "overwrite").parquet(os.path.join(out, "books"))
-    return out
+            "overwrite").parquet(os.path.join(scratch, "books"))
+    return cached_artifact(
+        "pqidx", [os.path.join(sf_dir, "embeddings.parquet")],
+        "pq_m16k32i2t512",
+        (_pq_index_dir, similarity.pq_train_books, similarity.pq_encode),
+        build)

@@ -30,7 +30,6 @@ from .registry_core import (  # noqa: F401
 )
 from .registry_ops import (  # noqa: F401
     _EVENTS_CSV_SCHEMA,
-    _code_tag,
     _events_csv_dir_flush,
     _run_to_memory,
     _stream_events,
@@ -42,6 +41,7 @@ from .registry_llm import (  # noqa: F401
     _docs_stream,
     _edges,
 )
+from .artifacts import cached_artifact
 from .registry_catalog import (  # noqa: F401
     _COSINE_Q,
     _QF_TOKS,
@@ -93,28 +93,23 @@ def _ivfpq_index_dir(spark: SparkSession, sf_dir: str) -> str:
     (vec_id + coarse cell + 16 residual 5-bit codes — the n_lists
     posting lists) and ``books/`` (the 1-row coarse-centroid + residual-
     codebook artifact). ``_pq_index_dir``'s pattern for the composed
-    index; ``books/`` is written last so its _SUCCESS marks the whole
-    index complete."""
-    import hashlib
+    index."""
     import os
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:"
-        "ivfpq_l8c3_m16k32i2t512"
-        f":{_code_tag(similarity.ivfpq_train, similarity.ivfpq_encode)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(_tempfile.gettempdir(), f"frde_ivfpqidx_{tag}")
-    if not os.path.exists(os.path.join(out, "books", "_SUCCESS")):
+
+    def build(scratch):
         emb = _emb(spark, sf_dir)
         coarse, books = similarity.ivfpq_train(
             emb, n_lists=8, coarse_iters=3, m=16, ks=32, pq_iters=2,
             train_max=512)
         similarity.ivfpq_encode(emb, coarse, books).write.mode(
-            "overwrite").parquet(os.path.join(out, "codes"))
+            "overwrite").parquet(os.path.join(scratch, "codes"))
         similarity._ivfpq_books_df(spark, coarse, books).write.mode(
-            "overwrite").parquet(os.path.join(out, "books"))
-    return out
+            "overwrite").parquet(os.path.join(scratch, "books"))
+    return cached_artifact(
+        "ivfpqidx", [os.path.join(sf_dir, "embeddings.parquet")],
+        "ivfpq_l8c3_m16k32i2t512",
+        (_ivfpq_index_dir, similarity.ivfpq_train, similarity.ivfpq_encode),
+        build)
 
 
 def x_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1909,22 +1904,14 @@ def _aggview_base_dir(spark: SparkSession, sf_dir: str) -> str:
     dashboard view a 100 TB deployment maintains nightly. Only the
     partial table (|keys| rows of exact-BIGINT counters) is ever stored;
     the base fact rows are never rescanned after this write."""
-    import hashlib
     import os
     from .operators import incremental
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:aggview_e4c"
-        f":{_code_tag(incremental.agg_partials, _aggview_base_dir)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(_tempfile.gettempdir(), f"frde_aggview_{tag}")
-    # meta/ (the delta cutoff, 1 row) is written LAST: its _SUCCESS marks
-    # the whole artifact complete. Persisting the cutoff beside the
-    # partials is what makes the REFRESH truly incremental — the query
-    # reads it back instead of re-scanning all of events for max(ts),
-    # and base/delta split on exactly the same boundary by construction.
-    if not os.path.exists(os.path.join(out, "meta", "_SUCCESS")):
+
+    # The delta cutoff (meta/, 1 row) persists beside the partials: that
+    # is what makes the REFRESH truly incremental — the query reads it
+    # back instead of re-scanning all of events for max(ts), and
+    # base/delta split on exactly the same boundary by construction.
+    def build(scratch):
         e = _events(spark, sf_dir)
         last_start = e.agg(
             F.date_trunc("DAY", F.max("ts")).alias("d")).collect()[0][0]
@@ -1932,10 +1919,12 @@ def _aggview_base_dir(spark: SparkSession, sf_dir: str) -> str:
                 .withColumn("value_e4",
                             F.round(F.col("value") * 10_000).cast("bigint")))
         incremental.agg_partials(base, ["event_type"], "value_e4") \
-            .write.mode("overwrite").parquet(os.path.join(out, "partials"))
+            .write.mode("overwrite").parquet(os.path.join(scratch, "partials"))
         spark.createDataFrame([(last_start,)], "cutoff timestamp_ntz") \
-            .write.mode("overwrite").parquet(os.path.join(out, "meta"))
-    return out
+            .write.mode("overwrite").parquet(os.path.join(scratch, "meta"))
+    return cached_artifact(
+        "aggview", [os.path.join(sf_dir, "events.parquet")], "aggview_e4c",
+        (_aggview_base_dir, incremental.agg_partials), build)
 
 
 def x_incremental_aggview(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2182,20 +2171,11 @@ def _events_kafka_topic_dir(spark: SparkSession, sf_dir: str) -> str:
     row_number over the deterministic (ts, event_id) order, value = the
     audit CSV line. No driver loop — the topic build is one window pass
     written as JSON lines, so it scales like any other layout job."""
-    import hashlib as _hashlib
     import os as _os
 
     from . import kafka_standin as _ks
-    src = _os.path.join(sf_dir, "events.parquet")
-    st = _os.stat(src)
-    tag = _hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{_os.getuid()}:"
-        f"{_code_tag(_events_kafka_topic_dir, _ks.produce)}".encode()
-    ).hexdigest()[:12]
-    out = _os.path.join(_tempfile.gettempdir(), f"frde_kafka_topic_{tag}")
-    data = _os.path.join(out, "data")
-    marker = _os.path.join(data, "_SUCCESS")
-    if not _os.path.exists(marker):
+
+    def build(scratch):
         from pyspark.sql import Window as _W
         ev = _events(spark, sf_dir)
         key = F.col("user_id").cast("string")
@@ -2216,8 +2196,10 @@ def _events_kafka_topic_dir(spark: SparkSession, sf_dir: str) -> str:
             F.col("ts_ms").alias("ts_ms"),
             F.lit(0).alias("timestampType"))
         (rows.select(F.to_json(F.struct(*rows.columns)).alias("value"))
-         .write.mode("overwrite").text(data))
-    return out
+         .write.mode("overwrite").text(_os.path.join(scratch, "data")))
+    return cached_artifact(
+        "kafka_topic", [_os.path.join(sf_dir, "events.parquet")], None,
+        (_events_kafka_topic_dir, _ks.produce), build)
 
 
 def x_kafka_standin_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2700,23 +2682,19 @@ def _postings_parquet_dir(spark: SparkSession, sf_dir: str) -> str:
     files by token (sortWithinPartitions after a token repartition), so
     every term lookup prunes on parquet row-group min/max stats instead
     of re-exploding the corpus per query."""
-    import hashlib as _hashlib
     import os as _os
-    src = _os.path.join(sf_dir, "documents.parquet")
-    st = _os.stat(src)
-    tag = _hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{_os.getuid()}:postings_v1:"
-        f"{_code_tag(_postings_parquet_dir)}".encode()).hexdigest()[:12]
-    out = _os.path.join(_tempfile.gettempdir(), f"frde_postings_{tag}")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
+
+    def build(scratch):
         d = _docs(spark, sf_dir)
         tok = d.select("doc_id",
                        F.explode(text.tokens("text")).alias("tok"))
         per_doc = (tok.groupBy("tok", "doc_id")
                    .agg(F.count(F.lit(1)).cast("bigint").alias("tf")))
         (per_doc.repartition("tok").sortWithinPartitions("tok", "doc_id")
-         .write.mode("overwrite").parquet(out))
-    return out
+         .write.mode("overwrite").parquet(scratch))
+    return cached_artifact(
+        "postings", [_os.path.join(sf_dir, "documents.parquet")],
+        "postings_v1", (_postings_parquet_dir,), build)
 
 
 def x_keyword_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2748,29 +2726,22 @@ def _pq_incr_index_dir(spark: SparkSession, sf_dir: str) -> str:
     nightly-build / daily-delta split every production ANN index lives
     with: retraining codebooks per delta would invalidate every stored
     code, so books FREEZE on the base corpus and deltas only encode."""
-    import hashlib
     import os
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:pq_incr80"
-        # tag the BUILDER's own source too (r9 ADVICE): the 80% cutoff
-        # and index layout live here, not in the trained-fn sources —
-        # matching _postings_parquet_dir / _events_kafka_topic_dir.
-        f":{_code_tag(similarity.pq_train_books, similarity.pq_encode, _pq_incr_index_dir)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(_tempfile.gettempdir(), f"frde_pqincr_{tag}")
-    if not os.path.exists(os.path.join(out, "books", "_SUCCESS")):
+
+    def build(scratch):
         emb = _emb(spark, sf_dir)
         cutoff = 4 * emb.count() // 5
         base = emb.filter(F.col("vec_id") < cutoff)
         books = similarity.pq_train_books(base, m=16, ks=32, iters=2,
                                           train_max=512)
         similarity.pq_encode(base, books).write.mode("overwrite").parquet(
-            os.path.join(out, "codes"))
+            os.path.join(scratch, "codes"))
         similarity._pq_books_df(spark, books).write.mode(
-            "overwrite").parquet(os.path.join(out, "books"))
-    return out
+            "overwrite").parquet(os.path.join(scratch, "books"))
+    return cached_artifact(
+        "pqincr", [os.path.join(sf_dir, "embeddings.parquet")], "pq_incr80",
+        (_pq_incr_index_dir, similarity.pq_train_books, similarity.pq_encode),
+        build)
 
 
 def x_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,6 +20,7 @@ from .registry_core import (  # noqa: F401
     text,
 )
 
+from .artifacts import cached_artifact
 from .registry_catalog import _QF_TOKS as _QF_TOKS_D  # noqa: E402 — shared
 # token regex (same engine-side tokens() the quality-family oracles replay)
 
@@ -311,27 +312,20 @@ def _dsir_weights_dir(spark: SparkSession, sf_dir: str) -> str:
     the nightly curation job trains the hashed-LM weights once and every
     scoring pass — incoming batches, re-scores, audits — reads the tiny
     parquet and never rescans the training corpus."""
-    import hashlib
     import os
-    import tempfile
-    from .registry_ops import _code_tag
     from .functions.dedup import _md5_hash32
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    # Tag covers the builder AND its algorithmic helpers (tokens,
+    # The key covers the builder AND its algorithmic helpers (tokens,
     # _md5_hash32): a tokenizer/hash change must invalidate the persisted
     # weights, else a stale artifact would be scored against a freshly
-    # updated inline oracle (r10 ADVICE).
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:dsir_en_b1024"
-        f":{_code_tag(text.dsir_bucket_weights, text.tokens, _md5_hash32)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_dsirw_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        w = text.dsir_bucket_weights(_docs(spark, sf_dir), target_col="lang",
-                                     target_value="en", buckets=1024)
-        w.coalesce(1).write.mode("overwrite").parquet(out)
-    return out
+    # updated inline oracle.
+    return cached_artifact(
+        "dsirw", [os.path.join(sf_dir, "documents.parquet")],
+        "dsir_en_b1024",
+        (_dsir_weights_dir, text.dsir_bucket_weights, text.tokens,
+         _md5_hash32),
+        lambda scratch: text.dsir_bucket_weights(
+            _docs(spark, sf_dir), target_col="lang", target_value="en",
+            buckets=1024).coalesce(1).write.mode("overwrite").parquet(scratch))
 
 
 def x_dsir_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,52 +632,29 @@ def _merge_table_dir(spark: SparkSession, sf_dir: str) -> str:
     genuine copy-on-write history: every x_merge_* query below reads a
     snapshot of THIS artifact at a different as-of batch, and the three
     oracles pin create/upsert/delete semantics plus tombstone ordering."""
-    import hashlib
     import os
-    import tempfile
     from . import sinks
-    from .registry_ops import _code_tag
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:merge_v1"
-        f":{_code_tag(sinks.merge_into, sinks.publish_batch, sinks.read_manifest)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_merge_{tag}")
-    done = os.path.join(out, "_manifests", "batch-2.json")
-    if not os.path.exists(done):
-        # Build in a scratch dir and rename into place atomically: a run
-        # that crashed mid-history would otherwise leave batch-N.json
-        # files a rebuild then interleaves with, so "batch-2.json exists"
-        # could be true while batch 1 references replaced batch-0 files
-        # (r11 ADVICE). rename() makes the completed history appear as
-        # one unit; a concurrent winner's table is equivalent by
-        # construction, so losing the race just discards the scratch.
-        import shutil
-        import uuid
-        tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
+
+    def build(scratch):
         base = _docs(spark, sf_dir).select(
             "doc_id", "source", F.col("n_chars").cast("bigint").alias("n_chars"))
         target = base.filter(F.col("doc_id") % 3 != 1)
         # CREATE spreads the table over several files so the MERGE's
         # file-level pruning has real granularity to prune against.
-        sinks.publish_batch(target.repartition(8, "doc_id"), tmp, 0)
+        sinks.publish_batch(target.repartition(8, "doc_id"), scratch, 0)
         upsert_src = (base.filter(F.col("doc_id") % 2 == 0)
                       .select("doc_id", "source",
                               (F.col("n_chars") + 1000).alias("n_chars")))
-        sinks.merge_into(spark, tmp, upsert_src, ["doc_id"],
+        sinks.merge_into(spark, scratch, upsert_src, ["doc_id"],
                          when_matched="update")
         del_keys = base.filter(F.col("doc_id") % 7 == 0).select("doc_id")
-        sinks.merge_into(spark, tmp, del_keys, ["doc_id"],
+        sinks.merge_into(spark, scratch, del_keys, ["doc_id"],
                          when_matched="delete")
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if os.path.exists(done):  # concurrent builder won the rename
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                raise
-    return out
+    return cached_artifact(
+        "merge", [os.path.join(sf_dir, "documents.parquet")],
+        "merge_v1",
+        (_merge_table_dir, sinks.merge_into, sinks.publish_batch,
+         sinks.read_manifest), build)
 
 
 def x_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -775,46 +746,29 @@ def _expiry_table_dir(spark: SparkSession, sf_dir: str) -> str:
     n_chars + 500; MERGE delete doc_id % 11 == 0), then
     ``expire_manifests(keep_last=2)`` — batch 0's delta manifest is
     compacted into a batch-1 checkpoint, its tombstoned/unreferenced
-    staging files are GC'd, and time travel to batch 0 errors loudly.
-    Built in scratch + atomic rename, like _merge_table_dir."""
-    import hashlib
+    staging files are GC'd, and time travel to batch 0 errors loudly."""
     import os
-    import shutil
-    import tempfile
-    import uuid
     from . import sinks
-    from .registry_ops import _code_tag
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:expiry_v1"
-        f":{_code_tag(sinks.merge_into, sinks.publish_batch, sinks.read_manifest, sinks.expire_manifests)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_expiry_{tag}")
-    done = os.path.join(out, "_manifests", "batch-2.json")
-    if not os.path.exists(done):
-        tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
+
+    def build(scratch):
         base = _docs(spark, sf_dir).select(
             "doc_id", "source", F.col("n_chars").cast("bigint").alias("n_chars"))
         target = base.filter(F.col("doc_id") % 3 != 2)
-        sinks.publish_batch(target.repartition(8, "doc_id"), tmp, 0)
+        sinks.publish_batch(target.repartition(8, "doc_id"), scratch, 0)
         upsert_src = (base.filter(F.col("doc_id") % 5 == 0)
                       .select("doc_id", "source",
                               (F.col("n_chars") + 500).alias("n_chars")))
-        sinks.merge_into(spark, tmp, upsert_src, ["doc_id"],
+        sinks.merge_into(spark, scratch, upsert_src, ["doc_id"],
                          when_matched="update")
         del_keys = base.filter(F.col("doc_id") % 11 == 0).select("doc_id")
-        sinks.merge_into(spark, tmp, del_keys, ["doc_id"],
+        sinks.merge_into(spark, scratch, del_keys, ["doc_id"],
                          when_matched="delete")
-        sinks.expire_manifests(tmp, keep_last=2)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if os.path.exists(done):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                raise
-    return out
+        sinks.expire_manifests(scratch, keep_last=2)
+    return cached_artifact(
+        "expiry", [os.path.join(sf_dir, "documents.parquet")],
+        "expiry_v1",
+        (_expiry_table_dir, sinks.merge_into, sinks.publish_batch,
+         sinks.read_manifest, sinks.expire_manifests), build)
 
 
 def x_manifest_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -861,27 +815,20 @@ def _hll_day_registers_dir(spark: SparkSession, sf_dir: str) -> str:
     at ANY coarser grain folds these registers (max per bucket) without
     rescanning the event log, and because the registers are md5-derived
     (functions/sketches.py:hll_portable) any engine can do the folding."""
-    import hashlib
     import os
-    import tempfile
-    from .registry_ops import _code_tag
     from .functions.dedup import _md5_hash32
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:hllday_p10"
-        f":{_code_tag(sketches.hll_rho, _md5_hash32)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_hllday_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+
+    def build(scratch):
         ev = _events(spark, sf_dir).select(
             F.expr("unix_millis(cast(ts as timestamp)) div 86400000")
             .alias("day"), "user_id")
         regs = (sketches.hll_rho(ev, "day", "user_id", p=10)
                 .groupBy("day", "bucket")
                 .agg(F.max("rho").alias("reg")))
-        regs.coalesce(1).write.mode("overwrite").parquet(out)
-    return out
+        regs.coalesce(1).write.mode("overwrite").parquet(scratch)
+    return cached_artifact(
+        "hllday", [os.path.join(sf_dir, "events.parquet")], "hllday_p10",
+        (_hll_day_registers_dir, sketches.hll_rho, _md5_hash32), build)
 
 
 def x_hll_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1146,37 +1093,20 @@ def _skipping_table_dir(spark: SparkSession, sf_dir: str) -> str:
     files with per-file [min, max] doc_id stats in the manifest
     (sinks.publish_batch stats_cols) — the writer-side clustering that
     makes file skipping effective, exactly as Iceberg/Delta tables sort
-    before writing. Built in scratch + atomic rename."""
-    import hashlib
+    before writing."""
     import os
-    import shutil
-    import tempfile
-    import uuid
     from . import sinks
-    from .registry_ops import _code_tag
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:skip_v1"
-        f":{_code_tag(sinks.publish_batch, sinks.read_manifest)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_skip_{tag}")
-    done = os.path.join(out, "_manifests", "batch-0.json")
-    if not os.path.exists(done):
-        tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
+
+    def build(scratch):
         base = _docs(spark, sf_dir).select(
             "doc_id", "source",
             F.col("n_chars").cast("bigint").alias("n_chars"))
-        sinks.publish_batch(base.repartitionByRange(8, "doc_id"), tmp, 0,
+        sinks.publish_batch(base.repartitionByRange(8, "doc_id"), scratch, 0,
                             stats_cols=["doc_id"])
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if os.path.exists(done):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                raise
-    return out
+    return cached_artifact(
+        "skip", [os.path.join(sf_dir, "documents.parquet")],
+        "skip_v1",
+        (_skipping_table_dir, sinks.publish_batch, sinks.read_manifest), build)
 
 
 def x_manifest_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1213,45 +1143,29 @@ def _optimize_table_dir(spark: SparkSession, sf_dir: str) -> str:
     hash-partitioned files (doc_id % 4 != 3), MERGE upsert
     (doc_id % 6 == 0, n_chars + 2000), then sinks.optimize_table —
     rewrite to 4 doc_id-range-clustered files with stats, tombstoning
-    every pre-optimize live file. Scratch + atomic rename."""
-    import hashlib
+    every pre-optimize live file."""
     import os
-    import shutil
-    import tempfile
-    import uuid
     from . import sinks
-    from .registry_ops import _code_tag
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:opt_v1"
-        f":{_code_tag(sinks.optimize_table, sinks.merge_into, sinks.publish_batch, sinks.read_manifest)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_opt_{tag}")
-    done = os.path.join(out, "_manifests", "batch-2.json")
-    if not os.path.exists(done):
-        tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
+
+    def build(scratch):
         base = _docs(spark, sf_dir).select(
             "doc_id", "source",
             F.col("n_chars").cast("bigint").alias("n_chars"))
         sinks.publish_batch(
             base.filter(F.col("doc_id") % 4 != 3).repartition(12, "doc_id"),
-            tmp, 0)
+            scratch, 0)
         upsert = (base.filter(F.col("doc_id") % 6 == 0)
                   .select("doc_id", "source",
                           (F.col("n_chars") + 2000).alias("n_chars")))
-        sinks.merge_into(spark, tmp, upsert, ["doc_id"],
+        sinks.merge_into(spark, scratch, upsert, ["doc_id"],
                          when_matched="update")
-        sinks.optimize_table(spark, tmp, cluster_by="doc_id",
+        sinks.optimize_table(spark, scratch, cluster_by="doc_id",
                              target_files=4, stats_cols=["doc_id"])
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if os.path.exists(done):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                raise
-    return out
+    return cached_artifact(
+        "opt", [os.path.join(sf_dir, "documents.parquet")],
+        "opt_v1",
+        (_optimize_table_dir, sinks.optimize_table, sinks.merge_into,
+         sinks.publish_batch, sinks.read_manifest), build)
 
 
 def x_manifest_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1288,41 +1202,24 @@ def _zorder_table_dir(spark: SparkSession, sf_dir: str) -> str:
     """Manifest table for the ZORDER family: documents
     (doc_id, source, n_chars) created hash-scattered, then
     sinks.optimize_table(cluster_by=["doc_id", "n_chars"]) — min-max
-    16-bit bit-interleaved curve clustering with stats on BOTH columns.
-    Scratch + atomic rename."""
-    import hashlib
+    16-bit bit-interleaved curve clustering with stats on BOTH columns."""
     import os
-    import shutil
-    import tempfile
-    import uuid
     from . import sinks
-    from .registry_ops import _code_tag
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:zorder_v1"
-        f":{_code_tag(sinks.optimize_table, sinks.publish_batch, sinks.read_manifest)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_zorder_{tag}")
-    done = os.path.join(out, "_manifests", "batch-1.json")
-    if not os.path.exists(done):
-        tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
+
+    def build(scratch):
         base = _docs(spark, sf_dir).select(
             "doc_id", "source",
             F.col("n_chars").cast("bigint").alias("n_chars"))
-        sinks.publish_batch(base.repartition(12, "doc_id"), tmp, 0)
-        sinks.optimize_table(spark, tmp,
+        sinks.publish_batch(base.repartition(12, "doc_id"), scratch, 0)
+        sinks.optimize_table(spark, scratch,
                              cluster_by=["doc_id", "n_chars"],
                              target_files=8,
                              stats_cols=["doc_id", "n_chars"])
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if os.path.exists(done):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                raise
-    return out
+    return cached_artifact(
+        "zorder", [os.path.join(sf_dir, "documents.parquet")],
+        "zorder_v1",
+        (_zorder_table_dir, sinks.optimize_table, sinks.publish_batch,
+         sinks.read_manifest), build)
 
 
 def x_manifest_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1364,25 +1261,11 @@ def _checkpoint_table_dir(spark: SparkSession, sf_dir: str) -> str:
     MERGE delete of ``doc_id % 7 == 0`` — so the latest snapshot folds
     the CHECKPOINTED state (commits <= 10) plus a tail ADD (11) plus a
     tail TOMBSTONE (12), exercising every fold path across the
-    checkpoint seam. Built in scratch + atomic rename, like
-    _merge_table_dir."""
-    import hashlib
+    checkpoint seam."""
     import os
-    import shutil
-    import tempfile
-    import uuid
     from . import sinks
-    from .registry_ops import _code_tag
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:logckpt_v1"
-        f":{_code_tag(sinks.publish_batch, sinks.write_checkpoint, sinks.read_manifest, sinks.merge_into)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_logckpt_{tag}")
-    done = os.path.join(out, "_manifests", "batch-12.json")
-    if not os.path.exists(done):
-        tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
+
+    def build(scratch):
         base = _docs(spark, sf_dir).select(
             "doc_id", "source",
             F.col("n_chars").cast("bigint").alias("n_chars"))
@@ -1390,18 +1273,15 @@ def _checkpoint_table_dir(spark: SparkSession, sf_dir: str) -> str:
             sl = (base.filter(F.col("doc_id") % 12 == i)
                   .select("doc_id", "source",
                           (F.col("n_chars") + i * 100).alias("n_chars")))
-            sinks.publish_batch(sl.repartition(4, "doc_id"), tmp, i)
+            sinks.publish_batch(sl.repartition(4, "doc_id"), scratch, i)
         del_keys = base.filter(F.col("doc_id") % 7 == 0).select("doc_id")
-        sinks.merge_into(spark, tmp, del_keys, ["doc_id"],
+        sinks.merge_into(spark, scratch, del_keys, ["doc_id"],
                          when_matched="delete")
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if os.path.exists(done):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                raise
-    return out
+    return cached_artifact(
+        "logckpt", [os.path.join(sf_dir, "documents.parquet")],
+        "logckpt_v1",
+        (_checkpoint_table_dir, sinks.publish_batch, sinks.write_checkpoint,
+         sinks.read_manifest, sinks.merge_into), build)
 
 
 def x_manifest_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1435,39 +1315,21 @@ def _bloom_table_dir(spark: SparkSession, sf_dir: str) -> str:
     documents projection HASH-partitioned by doc_id into 8 files (so
     every file's [min, max] spans the whole id domain and range stats
     prune nothing — the exact workload Bloom indexes exist for), with
-    per-file min/max stats AND per-file Bloom filters on doc_id. Built
-    in scratch + atomic rename, like _merge_table_dir."""
-    import hashlib
+    per-file min/max stats AND per-file Bloom filters on doc_id."""
     import os
-    import shutil
-    import tempfile
-    import uuid
     from . import sinks
-    from .registry_ops import _code_tag
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:bloom_v1"
-        f":{_code_tag(sinks.publish_batch, sinks.read_manifest)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_bloom_{tag}")
-    done = os.path.join(out, "_manifests", "batch-0.json")
-    if not os.path.exists(done):
-        tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
+
+    def build(scratch):
         base = _docs(spark, sf_dir).select(
             "doc_id", "source",
             F.col("n_chars").cast("bigint").alias("n_chars"))
-        sinks.publish_batch(base.repartition(8, "doc_id"), tmp, 0,
+        sinks.publish_batch(base.repartition(8, "doc_id"), scratch, 0,
                             stats_cols=["doc_id"],
                             bloom_cols=["doc_id"])
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if os.path.exists(done):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                raise
-    return out
+    return cached_artifact(
+        "bloom", [os.path.join(sf_dir, "documents.parquet")],
+        "bloom_v1",
+        (_bloom_table_dir, sinks.publish_batch, sinks.read_manifest), build)
 
 
 def x_manifest_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1506,42 +1368,25 @@ def _spec_evo_table_dir(spark: SparkSession, sf_dir: str) -> str:
     spec 0 clusters/stats on n_chars and commits the even doc_ids; the
     spec then EVOLVES to doc_id (sinks.set_partition_spec — metadata
     only, no rewrite) and commit 1 appends the odd doc_ids under the
-    new layout. Built in scratch + atomic rename, like
-    _merge_table_dir."""
-    import hashlib
+    new layout."""
     import os
-    import shutil
-    import tempfile
-    import uuid
     from . import sinks
-    from .registry_ops import _code_tag
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:specevo_v1"
-        f":{_code_tag(sinks.set_partition_spec, sinks.append_with_spec, sinks.read_manifest)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_specevo_{tag}")
-    done = os.path.join(out, "_manifests", "batch-1.json")
-    if not os.path.exists(done):
-        tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
+
+    def build(scratch):
         base = _docs(spark, sf_dir).select(
             "doc_id", "source",
             F.col("n_chars").cast("bigint").alias("n_chars"))
-        sinks.set_partition_spec(tmp, ["n_chars"])
-        sinks.append_with_spec(spark, tmp,
+        sinks.set_partition_spec(scratch, ["n_chars"])
+        sinks.append_with_spec(spark, scratch,
                                base.filter(F.col("doc_id") % 2 == 0), 0)
-        sinks.set_partition_spec(tmp, ["doc_id"])
-        sinks.append_with_spec(spark, tmp,
+        sinks.set_partition_spec(scratch, ["doc_id"])
+        sinks.append_with_spec(spark, scratch,
                                base.filter(F.col("doc_id") % 2 == 1), 1)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if os.path.exists(done):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                raise
-    return out
+    return cached_artifact(
+        "specevo", [os.path.join(sf_dir, "documents.parquet")],
+        "specevo_v1",
+        (_spec_evo_table_dir, sinks.set_partition_spec, sinks.append_with_spec,
+         sinks.read_manifest), build)
 
 
 def x_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1622,44 +1467,27 @@ def _schema_evo_table_dir(spark: SparkSession, sf_dir: str) -> str:
     """Commit-manifest table for schema evolution: commit 0 publishes
     the even doc_ids WITHOUT n_chars (the table's original 2-column
     schema); commit 1 publishes the odd doc_ids WITH the n_chars column
-    the schema later grew. No historical file is rewritten. Built in
-    scratch + atomic rename, like _merge_table_dir."""
-    import hashlib
+    the schema later grew. No historical file is rewritten."""
     import os
-    import shutil
-    import tempfile
-    import uuid
     from . import sinks
-    from .registry_ops import _code_tag
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:schevo_v1"
-        f":{_code_tag(sinks.publish_batch, sinks.read_manifest)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_schevo_{tag}")
-    done = os.path.join(out, "_manifests", "batch-1.json")
-    if not os.path.exists(done):
-        tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
+
+    def build(scratch):
         base = _docs(spark, sf_dir)
         sinks.publish_batch(
             base.filter(F.col("doc_id") % 2 == 0)
             .select("doc_id", "source").repartition(4, "doc_id"),
-            tmp, 0)
+            scratch, 0)
         sinks.publish_batch(
             base.filter(F.col("doc_id") % 2 == 1)
             .select("doc_id", "source",
                     F.col("n_chars").cast("bigint").alias("n_chars"))
             .repartition(4, "doc_id"),
-            tmp, 1)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if os.path.exists(done):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                raise
-    return out
+            scratch, 1)
+    return cached_artifact(
+        "schevo", [os.path.join(sf_dir, "documents.parquet")],
+        "schevo_v1",
+        (_schema_evo_table_dir, sinks.publish_batch, sinks.read_manifest),
+        build)
 
 
 def x_manifest_schema_evo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1815,41 +1643,25 @@ def _mor_table_dir(spark: SparkSession, sf_dir: str) -> str:
     doc_id % 5 == 0 (sinks.delete_where — no data file rewritten);
     commit 2 appends the doc_id % 10 == 0 slice with n_chars + 7 —
     rows that arrive AFTER the delete and must be immune to it by the
-    sequence rule. Built in scratch + atomic rename."""
-    import hashlib
+    sequence rule."""
     import os
-    import shutil
-    import tempfile
-    import uuid
     from . import sinks
-    from .registry_ops import _code_tag
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:mor_v1"
-        f":{_code_tag(sinks.publish_batch, sinks.delete_where, sinks.read_manifest)}"
-        .encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"frde_mor_{tag}")
-    done = os.path.join(out, "_manifests", "batch-2.json")
-    if not os.path.exists(done):
-        tmp = f"{out}.build-{uuid.uuid4().hex[:8]}"
+
+    def build(scratch):
         base = _docs(spark, sf_dir).select(
             "doc_id", "source",
             F.col("n_chars").cast("bigint").alias("n_chars"))
-        sinks.publish_batch(base.repartition(8, "doc_id"), tmp, 0)
-        sinks.delete_where(spark, tmp, F.col("doc_id") % 5 == 0)
+        sinks.publish_batch(base.repartition(8, "doc_id"), scratch, 0)
+        sinks.delete_where(spark, scratch, F.col("doc_id") % 5 == 0)
         sinks.publish_batch_occ(
             base.filter(F.col("doc_id") % 10 == 0)
             .select("doc_id", "source",
-                    (F.col("n_chars") + 7).alias("n_chars")), tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if os.path.exists(done):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                raise
-    return out
+                    (F.col("n_chars") + 7).alias("n_chars")), scratch)
+    return cached_artifact(
+        "mor", [os.path.join(sf_dir, "documents.parquet")],
+        "mor_v1",
+        (_mor_table_dir, sinks.publish_batch, sinks.delete_where,
+         sinks.read_manifest), build)
 
 
 def x_manifest_mor(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,10 +30,9 @@ from .registry_core import (  # noqa: F401
     windows,
 )
 from .registry_ops import (  # noqa: F401
-    _code_tag,
     _run_to_memory,
-    _tempfile,
 )
+from .artifacts import cached_artifact
 
 
 
@@ -157,20 +156,15 @@ def _clusters_parquet_dir(spark: SparkSession, sf_dir: str) -> str:
     """Near-dup cluster output persisted ONCE per (corpus, params) to a
     cached parquet path — the production layout where a dashboard reads
     yesterday's cluster table instead of re-running LSH+verify+CC."""
-    import hashlib
     import os
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:h16b4n3t0.5"
-        f":{_code_tag(dedup.neardup_clusters)}".encode()).hexdigest()[:12]
-    out = os.path.join(_tempfile.gettempdir(), f"frde_clusters_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        clusters = dedup.neardup_clusters(_docs(spark, sf_dir),
-                                          num_hashes=16, bands=4, n=3,
-                                          threshold=0.5)
-        clusters.write.mode("overwrite").parquet(out)
-    return out
+
+    def build(scratch):
+        dedup.neardup_clusters(_docs(spark, sf_dir), num_hashes=16, bands=4,
+                               n=3, threshold=0.5) \
+            .write.mode("overwrite").parquet(scratch)
+    return cached_artifact(
+        "clusters", [os.path.join(sf_dir, "documents.parquet")],
+        "h16b4n3t0.5", (_clusters_parquet_dir, dedup.neardup_clusters), build)
 
 
 def _edges_parquet_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -182,19 +176,15 @@ def _edges_parquet_dir(spark: SparkSession, sf_dir: str) -> str:
     at 100 TB the edge table is written once by the nightly dedup job and
     each analysis is a scan + joins over ids-only rows. Cold-run parity
     for the build itself stays registered as ``x_neardup_pipeline``."""
-    import hashlib
     import os
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}:edges_h16b4n3t0.5"
-        f":{_code_tag(dedup.neardup_pipeline)}".encode()).hexdigest()[:12]
-    out = os.path.join(_tempfile.gettempdir(), f"frde_edges_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        pairs = dedup.neardup_pipeline(_docs(spark, sf_dir), num_hashes=16,
-                                       bands=4, n=3, threshold=0.5)
-        pairs.write.mode("overwrite").parquet(out)
-    return out
+
+    def build(scratch):
+        dedup.neardup_pipeline(_docs(spark, sf_dir), num_hashes=16, bands=4,
+                               n=3, threshold=0.5) \
+            .write.mode("overwrite").parquet(scratch)
+    return cached_artifact(
+        "edges", [os.path.join(sf_dir, "documents.parquet")],
+        "h16b4n3t0.5", (_edges_parquet_dir, dedup.neardup_pipeline), build)
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -691,20 +681,12 @@ def _symlink_stream_dir(sf_dir: str, filename: str, kind: str) -> str:
     parquet — the file-source stream adapter (the source monitors
     DIRECTORIES only). No data copy; a regenerated fixture changes the
     tag and so invalidates the cached dir. Shared by _docs_stream and
-    registry_ext_d._emb_stream (r10 ADVICE: the pattern was duplicated)."""
-    import hashlib
+    registry_ext_d._emb_stream."""
     import os
     src = os.path.join(sf_dir, filename)
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}".encode()
-    ).hexdigest()[:12]
-    link_dir = os.path.join(_tempfile.gettempdir(), f"frde_{kind}_{tag}")
-    os.makedirs(link_dir, exist_ok=True)
-    link = os.path.join(link_dir, filename)
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return link_dir
+    return cached_artifact(
+        kind, [src], filename, (_symlink_stream_dir,),
+        lambda scratch: os.symlink(src, os.path.join(scratch, filename)))
 
 
 def _docs_stream(spark: SparkSession, sf_dir: str,
@@ -782,21 +764,16 @@ def x_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the partitioned layout preserves rows/values exactly and the
     partition-column round trip is lossless — the write path as an
     oracle-checked query, not just a unit test."""
-    import hashlib
     import os
     from .operators.bucketing import write_partitioned
     ev = _events(spark, sf_dir).select("event_id", "user_id", "event_type",
                                        "ts_ms", "value")
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}"
-                      .encode()).hexdigest()[:12]
-    path = os.path.join(_tempfile.gettempdir(), f"frde_part_{tag}")
-    marker = os.path.join(path, "_SUCCESS")
-    if os.path.exists(marker):
-        back = (spark.read.schema(ev.schema).parquet(path)
-                .select(*[f.name for f in ev.schema.fields]))
-    else:
-        back = write_partitioned(ev, path, "event_type")
+    path = cached_artifact(
+        "part", [os.path.join(sf_dir, "events.parquet")], None,
+        (x_partitioned_prune, write_partitioned),
+        lambda scratch: write_partitioned(ev, scratch, "event_type"))
+    back = (spark.read.schema(ev.schema).parquet(path)
+            .select(*[f.name for f in ev.schema.fields]))
     return (back.filter(F.col("event_type") == "click")
                 .groupBy("user_id")
                 .agg(F.count(F.lit(1)).alias("n_clicks"),
@@ -829,22 +806,17 @@ def x_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout is lossless and the box filter semantics survive the
     round trip; the row-group-skip pytest proves the layout actually
     prunes (footer min/max stats, both dimensions)."""
-    import hashlib
     import os
     from .operators.bucketing import write_zordered
     ev = (_events(spark, sf_dir)
           .select("event_id", "user_id", "event_type", "ts_ms", "value")
           .withColumn("day", F.expr("ts_ms div 86400000").cast("bigint")))
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}"
-                      .encode()).hexdigest()[:12]
-    path = os.path.join(_tempfile.gettempdir(), f"frde_zord_{tag}")
-    marker = os.path.join(path, "_SUCCESS")
-    if os.path.exists(marker):
-        back = (spark.read.schema(ev.schema).parquet(path)
-                .select(*[f.name for f in ev.schema.fields]))
-    else:
-        back = write_zordered(ev, path, "user_id", "day", bits=8)
+    path = cached_artifact(
+        "zord", [os.path.join(sf_dir, "events.parquet")], None,
+        (x_zorder_prune, write_zordered),
+        lambda scratch: write_zordered(ev, scratch, "user_id", "day", bits=8))
+    back = (spark.read.schema(ev.schema).parquet(path)
+            .select(*[f.name for f in ev.schema.fields]))
     lo_u, hi_u, lo_d, hi_d = 100, 140, 19730, 19739
     return (back.filter((F.col("user_id") >= lo_u) & (F.col("user_id") <= hi_u)
                         & (F.col("day") >= lo_d) & (F.col("day") <= hi_d))

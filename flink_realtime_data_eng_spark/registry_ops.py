@@ -267,48 +267,20 @@ import os as _os
 import tempfile as _tempfile
 import uuid as _uuid
 
-
-def _code_tag(*fns) -> str:
-    """8-hex code-version token for /tmp index cache tags: the md5 of the
-    builder functions' SOURCE, so an algorithm change invalidates the
-    persisted artifact even though the input fixture's size/mtime did not
-    move (r6 ADVICE: the param-string-only tags served stale indexes
-    across code revisions)."""
-    import hashlib
-    import inspect
-    parts = []
-    for fn in fns:
-        try:
-            parts.append(inspect.getsource(fn))
-        except (OSError, TypeError):
-            # Stable fallback — repr() embeds the process memory address
-            # and would defeat the cache every run in any source-less
-            # environment (r7 ADVICE).
-            parts.append(f"{getattr(fn, '__module__', '')}."
-                         f"{getattr(fn, '__qualname__', repr(type(fn)))}")
-    return hashlib.md5("\x00".join(parts).encode()).hexdigest()[:8]
+from .artifacts import cached_artifact
 
 
 def _events_csv_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write events (event_id, user_id, event_type, ts_ms) as CSV lines for
-    the file-monitor source. One file per input partition; cached per sf_dir
-    within a session via a deterministic temp path."""
-    import hashlib
-    import os
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    # Cache key covers path + size + mtime + uid: a regenerated fixture
-    # invalidates the cache, and concurrent users don't collide in /tmp.
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{os.getuid()}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(_tempfile.gettempdir(), f"frde_events_csv_{tag}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
+    the file-monitor source. One file per input partition; cached per
+    fixture and code revision."""
+    def build(scratch):
         (_events(spark, sf_dir)
          .select("event_id", "user_id", "event_type", "ts_ms")
-         .write.mode("overwrite").csv(out))
-    return out
+         .write.mode("overwrite").csv(scratch))
+    return cached_artifact("events_csv",
+                           [_os.path.join(sf_dir, "events.parquet")], None,
+                           (_events_csv_dir,), build)
 
 
 _EVENTS_CSV_SCHEMA = T.StructType([
@@ -477,22 +449,16 @@ def _events_csv_dir_flush(spark: SparkSession, sf_dir: str) -> str:
     event_type '__flush__', far-future ts). Kept separate from the shared
     replay dir so the sentinel never leaks into other demos' windows;
     base part-files are hardlinked, not copied."""
-    import os
-    base = _events_csv_dir(spark, sf_dir)
-    out = base + "_flush"
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        os.makedirs(out, exist_ok=True)
-        for f in os.listdir(base):
+    def build(scratch):
+        base = _events_csv_dir(spark, sf_dir)
+        for f in _os.listdir(base):
             if f.endswith(".csv"):
-                dst = os.path.join(out, f)
-                if not os.path.exists(dst):
-                    os.link(os.path.join(base, f), dst)
-        with open(os.path.join(out, "zz_flush.csv"), "w") as fh:
+                _os.link(_os.path.join(base, f), _os.path.join(scratch, f))
+        with open(_os.path.join(scratch, "zz_flush.csv"), "w") as fh:
             fh.write(f"-1,-1,__flush__,{_FLUSH_TS_MS}\n")
-        with open(marker, "w"):
-            pass
-    return out
+    return cached_artifact("events_csv_flush",
+                           [_os.path.join(sf_dir, "events.parquet")], None,
+                           (_events_csv_dir_flush, _events_csv_dir), build)
 
 
 def j5_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:

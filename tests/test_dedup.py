@@ -228,45 +228,6 @@ def test_label_propagation_duplicate_edges_and_ties(spark, monkeypatch, path):
     assert got[7] == 7 and got[8] == 8
 
 
-def test_connected_components_star_basic(spark):
-    from flink_realtime_data_eng_spark.functions.graph import (
-        connected_components_star)
-    edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (4, 3), (10, 11)], "id_a long, id_b long")
-    got = {r["node"]: r["label"]
-           for r in connected_components_star(edges).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-
-
-def test_connected_components_star_long_path(spark):
-    """The adversarial case min-label can't touch: a 10k-node path has
-    diameter 10k (min-label would need ~10k rounds); large/small-star must
-    converge within its default O(log^2 n) round cap."""
-    from flink_realtime_data_eng_spark.functions.graph import (
-        connected_components_star)
-    n = 10_000
-    edges = (spark.range(n - 1)
-             .select(F.col("id").alias("id_a"),
-                     (F.col("id") + 1).alias("id_b")))
-    labels = connected_components_star(edges)
-    agg = labels.agg(F.countDistinct("label").alias("k"),
-                     F.count("*").alias("n"),
-                     F.min("label").alias("lo")).collect()[0]
-    assert (agg["k"], agg["n"], agg["lo"]) == (1, n, 0)
-
-
-def test_connected_components_star_matches_min_label(spark):
-    """Both algorithms must produce identical labelings on the seeded
-    random graph."""
-    from flink_realtime_data_eng_spark.functions.graph import (
-        connected_components, connected_components_star)
-    edges = spark.createDataFrame(_random_pairs(), "id_a long, id_b long")
-    a = {r["node"]: r["label"] for r in connected_components(edges).collect()}
-    b = {r["node"]: r["label"]
-         for r in connected_components_star(edges).collect()}
-    assert a == b
-
-
 def test_neardup_clusters_groups_mutual_dups(spark):
     from flink_realtime_data_eng_spark.functions import dedup
     docs = spark.createDataFrame(
@@ -428,25 +389,6 @@ def test_containment_candidate_gating_matches_full(spark):
     assert set(gated) <= {(1, 4), (2, 5)}
     for pair, c in gated.items():
         assert full[pair] == c
-
-
-def test_neardup_clusters_star_algorithm_matches_default(spark):
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "the quick brown fox jumps over the lazy dog today"),
-         (3, "the quick brown fox jumps over the lazy cat today"),
-         (4, "completely different text about spark and flink engines")],
-        "doc_id long, text string")
-    a = {(r["doc_id"], r["cluster_id"])
-         for r in dedup.neardup_clusters(docs, num_hashes=16, bands=8, n=3,
-                                         threshold=0.3).collect()}
-    b = {(r["doc_id"], r["cluster_id"])
-         for r in dedup.neardup_clusters(docs, num_hashes=16, bands=8, n=3,
-                                         threshold=0.3,
-                                         cc_algorithm="star").collect()}
-    assert a == b and a
-    with pytest.raises(ValueError):
-        dedup.neardup_clusters(docs, cc_algorithm="bogus")
 
 
 # -- Paragraph-level dedup --------------------------------------------------
