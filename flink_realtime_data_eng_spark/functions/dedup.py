@@ -21,7 +21,20 @@ DuckDB oracle can reproduce them bit-for-bit — deliberately NOT Spark's
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from .graph import counted_checkpoint
+
+# Shingle rows up to which prefix_filter_pairs runs in one task. On 4 cores
+# the one task beat the distributed PPJoin at every size measured (2.1-2.6x
+# up to 2.08M rows; SCALE.md, x_prefix_filter_join); 2M is that measured
+# range, and the graph fixpoints' one-task size.
+_PREFIX_ONE_TASK_ROWS = 2_000_000
+# Pair rows one kernel step holds at a time (~100 MB of int64 columns).
+_PAIR_CHUNK = 4_000_000
 
 
 def _norm(text_col: str) -> Column:
@@ -125,7 +138,15 @@ def jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.8,
     """Doc pairs with shingle-set Jaccard >= threshold (scale notes on
     :func:`_overlap_pairs`). Output: id_a, id_b, jaccard (rounded to 6 dp
     — the oracle contract)."""
-    ov = _overlap_pairs(df, n, text_col, id_col, candidates, shingles_df)
+    return _jaccard_at_least(
+        _overlap_pairs(df, n, text_col, id_col, candidates, shingles_df),
+        threshold)
+
+
+def _jaccard_at_least(ov: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` from overlap counts ``(id_a, id_b,
+    n_common, n_a, n_b)``: Jaccard rounded to 6 dp (the oracle contract),
+    kept when the ROUNDED value clears ``threshold``."""
     return (ov.withColumn(
                 "jaccard",
                 F.round(F.col("n_common").cast("double")
@@ -659,6 +680,141 @@ def dup_ngram_fraction(df: DataFrame, n: int = 8, min_docs: int = 2,
             .withColumn("keep", F.col("dup_frac") <= F.lit(max_frac)))
 
 
+def _expand(start: np.ndarray, length: np.ndarray):
+    """Item ``k`` expanded to positions ``start[k] .. start[k] +
+    length[k] - 1``, yielded as ``(k, pos)`` arrays in item order, at most
+    ``_PAIR_CHUNK`` positions per step (an item longer than that is one
+    step on its own)."""
+    ends = np.cumsum(length)
+    lo = 0
+    while lo < len(length):
+        done = ends[lo - 1] if lo else 0
+        hi = max(int(np.searchsorted(ends, done + _PAIR_CHUNK, "right")),
+                 lo + 1)
+        ln = length[lo:hi]
+        k = np.repeat(np.arange(lo, hi), ln)
+        shift = np.repeat(start[lo:hi] - (ends[lo:hi] - ln - done), ln)
+        yield k, shift + np.arange(len(k))
+        lo = hi
+
+
+def _per_pair(key, m, last_a, last_b):
+    """Rows grouped by pair ``key``: ``(key, sum of m, max of last_a, max
+    of last_b)``, keys ascending."""
+    if not len(key):
+        return key, m, last_a, last_b
+    order = np.argsort(key, kind="stable")
+    key = key[order]
+    heads = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+    return (key[heads], np.add.reduceat(m[order], heads),
+            np.maximum.reduceat(last_a[order], heads),
+            np.maximum.reduceat(last_b[order], heads))
+
+
+def _ppjoin_in_one_task(sh: DataFrame, id_col: str, num: int,
+                        den: int) -> DataFrame:
+    """PPJoin over the whole shingle table ``sh`` ``(id_col, shingle)`` in
+    ONE task (``coalesce(1).mapInPandas``), for t = ``num/den``: overlap
+    counts ``(id_a, id_b, n_common, n_a, n_b)``, id_a < id_b, of the
+    candidate pairs whose Jaccard may round up to t.
+
+    Ids are factorized with ``sort=True``, so code order is value order
+    (for strings, code-point order, which is Spark's UTF-8 binary order)
+    and ``id_a < id_b`` means what it means in Spark. Shingles become
+    integer codes; each doc's codes are ranked by (document frequency,
+    code), a total order, so the prefix rule of :func:`prefix_filter_pairs`
+    stays lossless. Candidates are pairs sharing a prefix code that pass
+    the length filter and two upper bounds on their overlap, all in exact
+    integers; ``n_common`` is then counted exactly. NULL ids never pair
+    (as in Spark) and are dropped before the task."""
+    key = sh.schema[id_col].dataType
+    schema = StructType(
+        [StructField("id_a", key), StructField("id_b", key)]
+        + [StructField(c, LongType()) for c in ("n_common", "n_a", "n_b")])
+
+    def kernel(batches):
+        frames = list(batches)
+        if not frames:
+            return
+        s = pd.concat(frames, ignore_index=True)
+        doc, ids = pd.factorize(s[id_col], sort=True)
+        code, _ = pd.factorize(s["shingle"])
+        ids, n_docs, n_codes = np.asarray(ids), len(ids), int(code.max()) + 1
+        # rows grouped by doc, each doc's codes in (frequency, code) order
+        order = np.lexsort((code, np.bincount(code)[code], doc))
+        doc, code = doc[order], code[order]
+        size = np.bincount(doc, minlength=n_docs)
+        first = np.cumsum(size) - size
+        rank = np.arange(len(doc)) - first[doc]
+        n = size[doc]
+        # prefix rows: rank < n - ceil(t*n) + 1, ordered by (code, doc)
+        p = np.flatnonzero(rank < n - (n * num + den - 1) // den + 1)
+        p = p[np.lexsort((doc[p], code[p]))]
+        head = np.r_[True, code[p][1:] != code[p][:-1]]
+        group_end = np.r_[np.flatnonzero(head)[1:], len(p)][np.cumsum(head) - 1]
+        at = np.arange(len(p))
+        # per pair: m shared prefix codes, the ranks of the last of them
+        parts = [(np.empty(0, np.int64),) * 4]
+        for i, j in _expand(at + 1, group_end - at - 1):
+            ra, rb = p[i], p[j]
+            na, nb = n[ra], n[rb]
+            ok = ((doc[ra] < doc[rb])
+                  & (np.minimum(na, nb) * den >= np.maximum(na, nb) * num))
+            ra, rb = ra[ok], rb[ok]
+            parts.append(_per_pair(doc[ra] * n_docs + doc[rb],
+                                   np.ones(len(ra), np.int64),
+                                   rank[ra], rank[rb]))
+        cand, m, last_a, last_b = _per_pair(
+            *[np.concatenate(c) for c in zip(*parts)])
+        a, b = cand // n_docs, cand % n_docs
+        na, nb = size[a], size[b]
+        # Codes rank in one global order, so a code both docs share beyond
+        # the last shared prefix code ranks after it on BOTH sides: the
+        # overlap is m plus at most the shorter remaining suffix.
+        rest_a, rest_b = na - last_a - 1, nb - last_b - 1
+        alpha = (num * (na + nb) + num + den - 1) // (num + den)
+        ok = m + np.minimum(rest_a, rest_b) >= alpha
+        # Bucket bound (the count form of the bitmap filter, Sandes et al.
+        # 2020): codes fall into `width` buckets by code, and two docs
+        # share at most sum over buckets of min(their counts there). The
+        # width keeps the doc x bucket table to 16M cells.
+        width = int(np.clip((1 << 24) // n_docs, 1, 128))
+        counts = np.bincount(doc * width + code % width,
+                             minlength=n_docs * width)
+        counts = counts.reshape(n_docs, width).astype(
+            np.min_scalar_type(size.max()))
+        sel = np.flatnonzero(ok)
+        step = max(1, _PAIR_CHUNK // width)
+        for i in range(0, len(sel), step):
+            c = sel[i:i + step]
+            ok[c] = np.minimum(counts[a[c]], counts[b[c]]).sum(1) >= alpha[c]
+        cand, a, b, m = cand[ok], a[ok], b[ok], m[ok]
+        last_a, last_b, rest_a, rest_b = (last_a[ok], last_b[ok],
+                                          rest_a[ok], rest_b[ok])
+        # count the rest exactly: look the shorter suffix's codes up in the
+        # other doc's sorted (doc, code) keys
+        a_short = rest_a <= rest_b
+        x = np.where(a_short, a, b)
+        y = a + b - x
+        x_from = first[x] + np.where(a_short, last_a, last_b) + 1
+        keys = np.sort(doc * n_codes + code)
+        common = m
+        for k, pos in _expand(x_from, np.minimum(rest_a, rest_b)):
+            probe = y[k] * n_codes + code[pos]
+            hit = keys[np.minimum(np.searchsorted(keys, probe),
+                                  len(keys) - 1)] == probe
+            common += np.bincount(k[hit], minlength=len(cand))
+        na, nb = size[a], size[b]
+        # the tail's 6-dp rounding lifts a ratio up to 5e-7 below t onto t
+        keep = common >= (num / den - 1e-6) * (na + nb - common)
+        yield pd.DataFrame({"id_a": ids[a[keep]], "id_b": ids[b[keep]],
+                            "n_common": common[keep], "n_a": na[keep],
+                            "n_b": nb[keep]})
+
+    return (sh.filter(F.col(id_col).isNotNull()).coalesce(1)
+            .mapInPandas(kernel, schema))
+
+
 def prefix_filter_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                         text_col: str = "text",
                         id_col: str = "doc_id") -> DataFrame:
@@ -673,20 +829,38 @@ def prefix_filter_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     shingles (from J = c/(|x|+|y|-c) and |y| >= c), and two sets that
     share that much overlap MUST collide inside prefixes of length
     |x| - ceil(t*|x|) + 1 under a common total order — so the candidate
-    set provably contains every qualifying pair. Exact Jaccard
-    verification of the surviving candidates then matches the
-    full-self-join :func:`jaccard_pairs` result — identical up to the
-    tier-1 fingerprint screen below, whose only loss mode is >= 2
-    within-pair 64-bit hash collisions (expected < 1e-20 at 10^12
-    candidate pairs; the prefix/length/positional filters themselves are
-    strictly lossless). That match is the oracle: DuckDB replays the
-    plain exact join.
+    set provably contains every qualifying pair, whichever total order is
+    used. Exact Jaccard verification of the surviving candidates then
+    matches the full-self-join :func:`jaccard_pairs` result. That match
+    is the oracle: DuckDB replays the plain exact join.
 
-    r10 redesign (profiled at sf0.1/sf1/sf10 — the r9 watch item): the
-    original verify self-joined the candidate-doc shingle table on the
-    shingle string, which is O(sum of posting-list^2) over shingles the
-    candidate docs share — at 10x scale that stage was ~75% of the
-    wall-clock and the reason the measured exponent sat at 0.85/decade.
+    Two execution paths, chosen from the shingle table's MEASURED row
+    count (counted by the job that checkpoints the table, so the switch
+    costs no extra job):
+
+    - At most ``_PREFIX_ONE_TASK_ROWS`` rows (every bench-scale corpus;
+      sf0.1 has 260k): the whole join runs in ONE task
+      (:func:`_ppjoin_in_one_task`) on factorized shingle codes in numpy,
+      with the same prefix rule and length/positional filters and an
+      exact overlap count per candidate. Construction then runs only the
+      checkpoint; the kernel runs when the result executes. At this size
+      the distributed path's cost is its ~14 eager Spark jobs, not data
+      (break-even measured in SCALE.md, x_prefix_filter_join).
+    - Larger tables run the distributed PPJoin below, the only path that
+      grows past one task. Its tier-1 fingerprint screen is its only loss
+      mode: >= 2 within-pair 64-bit hash collisions (expected < 1e-20 at
+      10^12 candidate pairs; the prefix/length/positional filters
+      themselves are strictly lossless).
+
+    Both paths finish with the same rounding tail
+    (:func:`_jaccard_at_least`).
+
+    Distributed path, r10 redesign (profiled at sf0.1/sf1/sf10 — the r9
+    watch item): the original verify self-joined the candidate-doc
+    shingle table on the shingle string, which is O(sum of
+    posting-list^2) over shingles the candidate docs share — at 10x scale
+    that stage was ~75% of the wall-clock and the reason the measured
+    exponent sat at 0.85/decade.
     Three lossless tightenings (Xiao et al. WWW'08 PPJoin):
 
     1. LENGTH filter in the candidate join: J >= t forces
@@ -723,7 +897,14 @@ def prefix_filter_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     35 s; verify stage 26 s -> 10 s (fp tier) + ~2 s (exact tier).
     """
     from pyspark.sql import Window as W
-    sh = shingles(df, n, text_col, id_col).localCheckpoint(eager=True)
+    # t as an exact rational num/den (round-half covers any threshold
+    # given to <=6 decimals): every filter below compares integers.
+    _den = 1_000_000
+    _num = int(round(threshold * _den))
+    sh, rows = counted_checkpoint(shingles(df, n, text_col, id_col))
+    if rows <= _PREFIX_ONE_TASK_ROWS:
+        return _jaccard_at_least(_ppjoin_in_one_task(sh, id_col, _num, _den),
+                                 threshold)
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_freq"))
     # n_sh as an unbounded window count over the SAME doc partitioning the
     # rank sort already established — the separate per-doc sizes aggregate
@@ -736,12 +917,9 @@ def prefix_filter_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
               .withColumn("n_sh",
                           F.count(F.lit(1)).over(W.partitionBy(id_col))))
     # prefix length L = n_sh - ceil(t * n_sh) + 1  (>= 1 whenever n_sh >= 1).
-    # ceil in EXACT integer arithmetic: t as a rational num/1e6 (round-half
-    # covers any threshold given to <=6 decimals), ceil(a/b) = (a+b-1) div b —
-    # float F.ceil(t*n) can land one ulp high and shorten the prefix below
-    # the completeness bound, silently dropping qualifying pairs.
-    _den = 1_000_000
-    _num = int(round(threshold * _den))
+    # ceil in EXACT integer arithmetic, ceil(a/b) = (a+b-1) div b — float
+    # F.ceil(t*n) can land one ulp high and shorten the prefix below the
+    # completeness bound, silently dropping qualifying pairs.
     ceil_tn = F.expr(f"(n_sh * {_num}L + {_den - 1}L) div {_den}L")
     pref_len = F.col("n_sh") - ceil_tn + 1
     prefix = (ranked.filter(F.col("rn") <= pref_len)

@@ -54,7 +54,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 # frame that fits in one such partition runs its fixpoint in one task.
 _FIXPOINT_ROWS_PER_PARTITION = 2_000_000
 
-# Unique observed-metric names for _symmetric's edge counts.
+# Unique observed-metric names for counted_checkpoint's row counts.
 _OBSERVED = itertools.count()
 
 
@@ -88,30 +88,38 @@ def _distribute(df: DataFrame, width: int, *keys: str) -> DataFrame:
     return df.repartition(width, *[F.col(k) for k in keys])
 
 
+def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` materialized once (``localCheckpoint(eager=True)``) and its
+    row count.
+
+    The count rides the checkpoint's own job as an observed metric, so a
+    caller that sizes its plan from it pays no separate count job. The
+    metric is read from the checkpointed plan's accumulators once the job
+    returns, not through an ``Observation``: that waits, with no timeout,
+    for a listener-bus event the bus may deliver late or drop under
+    load."""
+    name = f"counted_checkpoint_{next(_OBSERVED)}"
+    observed = df.observe(name, F.count(F.lit(1)).alias("n"))
+    out = observed.localCheckpoint(eager=True)
+    n = observed._jdf.queryExecution().observedMetrics().apply(name)
+    return out, n.getLong(0)
+
+
 def _symmetric(edges: DataFrame, src: str, dst: str,
                distinct: bool = True) -> tuple[DataFrame, int]:
     """Both directions of every edge as ``(a, b)``, NULL endpoints dropped
     (NULL is not a node id), materialized ONCE and returned with its row
-    count.
+    count (:func:`counted_checkpoint`).
 
     The frame is re-read by every round, and its lineage embeds whatever
     produced the edges (e.g. the whole LSH+Jaccard pipeline) — without the
-    checkpoint the edge computation re-runs per round. The count rides the
-    checkpoint's own job as an observed metric, so sizing the fixpoint
-    costs no separate count job. The metric is read from the checkpointed
-    plan's accumulators once the job returns, not through an
-    ``Observation``: that waits, with no timeout, for a listener-bus event
-    the bus may deliver late or drop under load."""
+    checkpoint the edge computation re-runs per round."""
     sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
            .dropna())
     if distinct:
         sym = sym.distinct()
-    name = f"graph_symmetric_{next(_OBSERVED)}"
-    observed = sym.observe(name, F.count(F.lit(1)).alias("n"))
-    sym = observed.localCheckpoint(eager=True)
-    n = observed._jdf.queryExecution().observedMetrics().apply(name)
-    return sym, n.getLong(0)
+    return counted_checkpoint(sym)
 
 
 def _in_one_task(sym: DataFrame, step, max_rounds: int) -> DataFrame:

@@ -380,10 +380,19 @@ def x_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     brand) to recover cross-block matches. Output carries each name's
     record count and smallest record id, so record-level joins stay
     one map-side hop away."""
-    p = load_table(_prep(spark), sf_dir, "part")
-    names = (p.groupBy("p_name")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n_records"),
-                  F.min("p_partkey").cast("bigint").alias("rep_id")))
+    return _name_matches(_part_names(load_table(_prep(spark), sf_dir, "part")))
+
+
+def _part_names(part: DataFrame) -> DataFrame:
+    """Distinct part names with their record count and smallest key."""
+    return (part.groupBy("p_name")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_records"),
+                 F.min("p_partkey").cast("bigint").alias("rep_id")))
+
+
+def _name_matches(names: DataFrame) -> DataFrame:
+    """The blocked, edit-distance-verified name pairs of
+    :func:`x_entity_match` over a :func:`_part_names` table."""
     t = names.withColumn("blk", F.element_at(F.split("p_name", " "), -1))
     a = t.select(F.col("p_name").alias("name_a"),
                  F.col("n_records").alias("n_a"),
@@ -666,11 +675,9 @@ def x_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     record pairs."""
     from .functions import graph
     pt = load_table(_prep(spark), sf_dir, "part")
-    pairs = x_entity_match(spark, sf_dir)
-    cc = graph.connected_components(pairs, src="name_a", dst="name_b")
-    names = (pt.groupBy("p_name")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n_records"),
-                  F.min("p_partkey").cast("bigint").alias("rep_id")))
+    names = _part_names(pt)
+    cc = graph.connected_components(_name_matches(names),
+                                    src="name_a", dst="name_b")
     labeled = (names.join(cc, names["p_name"] == cc["node"], "left")
                .select("p_name", "n_records", "rep_id",
                        F.coalesce("label", "p_name").alias("cluster")))

@@ -173,18 +173,13 @@ def test_connected_components_raises_when_not_converged(spark, monkeypatch,
     assert {r["label"] for r in got} == {1}
 
 
-def test_connected_components_small_graph_runs_in_three_jobs(spark):
-    """A small graph converges in ONE task whatever its diameter: one job
-    pair materializes and counts the symmetric edges, one runs the whole
-    fixpoint and reads its round count — not a job or two per round."""
-    from flink_realtime_data_eng_spark.functions.graph import connected_components
-    edges = spark.createDataFrame([(i, i + 1) for i in range(19)],
-                                  "id_a long, id_b long")
+def _jobs_run_by(spark, group, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted under job group
+    ``group``; every job-group property is cleared afterwards."""
     sc = spark.sparkContext
-    group = "cc-job-count"
     sc.setJobGroup(group, group)
     try:
-        connected_components(edges)
+        fn()
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description",
                      "spark.job.interruptOnCancel"):
@@ -192,7 +187,18 @@ def test_connected_components_small_graph_runs_in_three_jobs(spark):
     # the status tracker is fed by the async listener bus: let it catch
     # up (bounded) so a lagging bus cannot hide jobs from the count
     sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_small_graph_runs_in_three_jobs(spark):
+    """A small graph converges in ONE task whatever its diameter: one job
+    pair materializes and counts the symmetric edges, one runs the whole
+    fixpoint and reads its round count — not a job or two per round."""
+    from flink_realtime_data_eng_spark.functions.graph import connected_components
+    edges = spark.createDataFrame([(i, i + 1) for i in range(19)],
+                                  "id_a long, id_b long")
+    assert _jobs_run_by(spark, "cc-job-count",
+                        lambda: connected_components(edges)) <= 3
 
 
 def _lpa_reference(pairs, rounds):
@@ -550,18 +556,90 @@ def test_full_dedup_policy_flag_consistency(spark):
             assert joint[r["doc_id"]]
 
 
-def test_prefix_filter_pairs_matches_full_jaccard(spark):
+def _prefix_path(monkeypatch, path):
+    """Route prefix_filter_pairs to ``path``: 'one_task' is the default
+    for any small corpus; 'distributed' lowers the one-task bound below
+    every shingle-row count."""
+    if path == "distributed":
+        monkeypatch.setattr(dedup, "_PREFIX_ONE_TASK_ROWS", -1)
+
+
+@pytest.mark.parametrize("path", ["one_task", "distributed"])
+def test_prefix_filter_pairs_matches_full_jaccard(spark, monkeypatch, path):
     """Prefix filtering is LOSSLESS: the candidate-gated result must
     equal the full self-join Jaccard at the same threshold (sf0.001)."""
-    from flink_realtime_data_eng_spark.functions import dedup
     from flink_realtime_data_eng_spark.schemas import load_table
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
+    _prefix_path(monkeypatch, path)
     full = {(r.id_a, r.id_b, r.jaccard) for r in
             dedup.jaccard_pairs(d, n=3, threshold=0.5).collect()}
     pref = {(r.id_a, r.id_b, r.jaccard) for r in
             dedup.prefix_filter_pairs(d, n=3, threshold=0.5).collect()}
     assert pref == full
     assert len(full) > 0  # non-vacuous
+
+
+def _jaccard_reference(rows, n, threshold):
+    """Plain-Python exact Jaccard join: distinct word n-grams of the
+    normalized text per id, pairs id_a < id_b sharing a shingle with
+    round(J, 6) >= threshold; NULL ids never pair."""
+    import re
+    sets = {}
+    for i, text in rows:
+        if i is None:
+            continue
+        w = re.sub(" +", " ", re.sub("[^a-z0-9 ]", "", (text or "").lower()))
+        w = w.strip().split(" ")
+        sets[i] = {" ".join(w[k:k + n]) for k in range(len(w) - n + 1)}
+    out = set()
+    for a, sa in sets.items():
+        for b, sb in sets.items():
+            if a < b and sa & sb:
+                j = round(len(sa & sb) / len(sa | sb), 6)
+                if j >= threshold:
+                    out.add((a, b, j))
+    return out
+
+
+_PPJ_CASES = {
+    "empty": ("long", []),
+    "short_only": ("long", [(1, "a"), (2, "b c"), (3, None)]),
+    # 1-2 identical (J = 1), 1-3 and 2-3 share 2 of 4 bigrams (J = t
+    # exactly), the NULL id copies doc 1, doc 4 is shorter than n
+    "edges": ("long", [(1, "a b c d"), (2, "A, b c d!"), (3, "a b c x"),
+                       (None, "a b c d"), (4, "a"), (5, "p q r s")]),
+    # Spark orders strings by UTF-8 bytes, i.e. by code point: 'é' > 'z'
+    "string_ids": ("string", [("é", "a b c d"), ("z", "a b c d"),
+                              ("B", "a b c x"), ("b", "q r s t")]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PPJ_CASES))
+@pytest.mark.parametrize("path", ["one_task", "distributed"])
+def test_prefix_filter_edge_inputs_match_reference(spark, monkeypatch,
+                                                   path, case):
+    """Both paths give the plain-Python exact join on empty input (no
+    batch reaches the one-task kernel), docs shorter than n, NULL ids and
+    texts, identical docs and a pair exactly at the threshold."""
+    key, rows = _PPJ_CASES[case]
+    df = spark.createDataFrame(rows, f"doc_id {key}, text string")
+    _prefix_path(monkeypatch, path)
+    got = {tuple(r) for r in
+           dedup.prefix_filter_pairs(df, n=2, threshold=0.5).collect()}
+    assert got == _jaccard_reference(rows, 2, 0.5)
+
+
+def test_prefix_filter_pairs_constructs_in_three_jobs(spark):
+    """Below the one-task bound, building the query runs only the
+    document read and the counted shingle checkpoint; the join itself
+    runs when the result executes (the distributed path ran ~14 jobs)."""
+    from flink_realtime_data_eng_spark.schemas import load_table
+
+    def build():
+        d = load_table(spark, "/root/testdata/sf0.001", "documents")
+        dedup.prefix_filter_pairs(d, n=3, threshold=0.5)
+
+    assert _jobs_run_by(spark, "ppjoin-job-count", build) <= 3
 
 
 def test_prefix_filter_prunes_candidates(spark):
@@ -670,14 +748,14 @@ def test_exact_substr_spans_distinct_regions_stay_split(spark):
     assert out == [(1, 0, 3), (1, 10, 13), (2, 0, 3), (2, 8, 11)]
 
 
-def test_prefix_filter_lossless_across_thresholds(spark):
-    """The r10 PPJoin filters + fingerprint-screen verify must stay
-    lossless at LOW thresholds (long prefixes, weak positional bound)
-    and HIGH ones (short prefixes, tight bound) — not just the registry's
-    t=0.5."""
-    from flink_realtime_data_eng_spark.functions import dedup
+@pytest.mark.parametrize("path", ["one_task", "distributed"])
+def test_prefix_filter_lossless_across_thresholds(spark, monkeypatch, path):
+    """The PPJoin filters and verify must stay lossless at LOW thresholds
+    (long prefixes, weak positional bound) and HIGH ones (short prefixes,
+    tight bound) — not just the registry's t=0.5."""
     from flink_realtime_data_eng_spark.schemas import load_table
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
+    _prefix_path(monkeypatch, path)
     for t in (0.3, 0.8):
         full = {(r.id_a, r.id_b, r.jaccard) for r in
                 dedup.jaccard_pairs(d, n=3, threshold=t).collect()}

@@ -8,6 +8,7 @@ deadlines disabled — the value is randomized coverage of boundary cases
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -510,14 +511,18 @@ _WORDS = st.lists(
     min_size=2, max_size=8)
 
 
+@pytest.mark.parametrize("path", ["one_task", "distributed"])
 @SLOW
 @given(texts=_WORDS, threshold=st.sampled_from([0.3, 0.5, 0.8]))
-def test_prefix_filter_is_lossless_on_random_corpora(spark, texts, threshold):
-    """The SSJoin/PPJoin prefix rule must be COMPLETE: candidate-gated
-    Jaccard equals the full self-join at any threshold, on corpora built
-    from a tiny vocabulary (maximal shingle collisions — the adversarial
-    case for prefix selection and frequency ties)."""
+def test_prefix_filter_is_lossless_on_random_corpora(spark, monkeypatch, path,
+                                                     texts, threshold):
+    """The SSJoin/PPJoin prefix rule must be COMPLETE on both paths:
+    candidate-gated Jaccard equals the full self-join at any threshold, on
+    corpora built from a tiny vocabulary (maximal shingle collisions — the
+    adversarial case for prefix selection and frequency ties)."""
     from flink_realtime_data_eng_spark.functions import dedup
+    if path == "distributed":
+        monkeypatch.setattr(dedup, "_PREFIX_ONE_TASK_ROWS", -1)
     df = spark.createDataFrame(list(enumerate(texts)),
                                "doc_id long, text string")
     full = {tuple(r) for r in
