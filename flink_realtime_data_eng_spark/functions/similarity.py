@@ -71,18 +71,21 @@ def cosine(a: str | Column, b: str | Column) -> Column:
     expression used (IEEE-identical in Python) — the fast path only
     serves values the bound proves round-identical."""
 
-    def _seq_cosine(va, vb) -> float:
-        dot = 0.0
+    def _seq_den(va, vb) -> float:
         sa = 0.0
         sb = 0.0
-        for x, y in zip(va, vb):
-            dot += float(x) * float(y)
         for x in va:
             sa += float(x) * float(x)
         for y in vb:
             sb += float(y) * float(y)
         import math
-        den = math.sqrt(sa) * math.sqrt(sb)
+        return math.sqrt(sa) * math.sqrt(sb)
+
+    def _seq_cosine(va, vb) -> float:
+        dot = 0.0
+        for x, y in zip(va, vb):
+            dot += float(x) * float(y)
+        den = _seq_den(va, vb)
         return dot / den if den > 0 else 0.0
 
     import numpy as np
@@ -97,8 +100,11 @@ def cosine(a: str | Column, b: str | Column) -> Column:
         # so the denominator, and when(den > 0, ·).otherwise(0.0) lands in
         # the 0.0 branch → a null side scores 0.0 (out is pre-zeroed);
         # unequal-length non-null vectors null only the DOT (zip_with pads
-        # with null) while den stays positive → NULL result.
-        nulls = (la >= 0) & (lb >= 0) & (la != lb)
+        # with null), so they score NULL where den > 0 and 0.0 where an
+        # empty or all-zero side makes den == 0.
+        nulls = np.zeros(n, dtype=bool)
+        for i in np.nonzero((la >= 0) & (lb >= 0) & (la != lb))[0]:
+            nulls[i] = _seq_den(va.iloc[i], vb.iloc[i]) > 0
         eps = np.finfo(np.float64).eps
         for d in np.unique(la[(la == lb) & (la >= 0)]):
             idx = np.nonzero((la == d) & (lb == d))[0]
@@ -176,8 +182,9 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
 # Hyperplane sign tables are precomputed driver-side up to this dim and
 # shipped in the UDF closure; wider vectors extend the table LAZILY on the
 # executor (same md5 parity, value-identical — the per-plane sign at index
-# i never depends on the table width), cached per worker. No behavior
-# cliff: any dim works, only the shipped-closure size is bounded here.
+# i never depends on the table width); each worker keeps only the widest
+# table (:func:`_sign_table`). No behavior cliff: any dim works, only the
+# shipped-closure size is bounded here.
 _LSH_MAX_DIM = 1024
 
 
@@ -191,6 +198,27 @@ def _plane_signs_py(plane: int, dim: int = _LSH_MAX_DIM) -> list[float]:
     return [1.0 if int(hashlib.md5(f"plane{plane}:{i}".encode())
                        .hexdigest()[:8], 16) % 2 == 1 else -1.0
             for i in range(dim)]
+
+
+def _sign_table(num_planes: int):
+    """``signs_for(d)``: the (d, planes) ±1 float64 table, a prefix slice of
+    the widest table built so far. It starts at ``_LSH_MAX_DIM`` (shipped in
+    the UDF closure) and is rebuilt wider on the executor only when a wider
+    vector arrives, so each worker keeps one table, however many widths it
+    sees; the sign at index i does not depend on the width."""
+    import numpy as np
+
+    def build(d: int) -> "np.ndarray":
+        return np.array([_plane_signs_py(p, d) for p in range(num_planes)],
+                        dtype=np.float64).T
+
+    widest = [build(_LSH_MAX_DIM)]
+
+    def signs_for(d: int) -> "np.ndarray":
+        if d > widest[0].shape[0]:
+            widest[0] = build(d)
+        return widest[0][:d]
+    return signs_for
 
 
 def lsh_signature(vec_col: str, num_planes: int = 8) -> Column:
@@ -220,22 +248,8 @@ def lsh_signature(vec_col: str, num_planes: int = 8) -> Column:
     before equi-joining on it — every in-repo consumer does."""
     import numpy as np
 
-    signs_t = np.array([_plane_signs_py(p) for p in range(num_planes)],
-                       dtype=np.float64).T  # (maxdim, planes)
+    _signs_for = _sign_table(num_planes)
     weights = np.array([1 << p for p in range(num_planes)], dtype=np.int64)
-    # Vectors wider than the pre-shipped table extend it lazily on the
-    # executor (value-identical md5 parity), cached per worker per dim.
-    _ext_cache: dict[int, "np.ndarray"] = {}
-
-    def _signs_for(d: int) -> "np.ndarray":
-        if d <= signs_t.shape[0]:
-            return signs_t[:d]
-        m = _ext_cache.get(d)
-        if m is None:
-            m = np.array([_plane_signs_py(p, d) for p in range(num_planes)],
-                         dtype=np.float64).T
-            _ext_cache[d] = m
-        return m
 
     @F.pandas_udf("long")
     def _sig(vs: pd.Series) -> pd.Series:

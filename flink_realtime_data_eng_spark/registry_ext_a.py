@@ -2478,8 +2478,9 @@ def x_joint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     each leaves the cluster idle while the driver plans the next round);
     building them on two threads overlaps one pipeline's driver gaps with
     the other's executor work. Safe since the fixpoints carry their
-    shuffle width as a plan property (graph._distribute) — no session
-    conf is mutated on either path."""
+    shuffle width as a plan property (graph._distribute) and the only
+    session confs either path sets are the two constants ``_prep`` sets
+    (time zone, nanosAsLong), the same values from both threads."""
     from concurrent.futures import ThreadPoolExecutor
 
     def _text_keep() -> DataFrame:

@@ -16,10 +16,24 @@ Two profiles:
   partition counts, never ordering semantics).
 
 Local mode honors ``SPARK_GRAFT_CPUS`` (driver contract) for ``local[N]``.
+
+Python workers start from :mod:`.pyworker` (``spark.python.daemon.module``).
+Spark puts its own ``pyspark.zip``, ``py4j`` zip and ``spark-core`` jar at
+the front of every worker's ``sys.path``, and PySpark re-reads each of those
+archives' directories at the start of every Python task (~100-200 ms before
+the first row). The module drops exactly those three archives when
+``pyspark`` and ``py4j`` also resolve from the installed packages, so the
+workers import the PySpark the driver imported. It leaves alone any other
+path entry (a user's ``--py-files`` zip), the worker module and every
+worker setting, and it keeps the archives when PySpark resolves nowhere
+else. The conf is set only in local mode and only when the workers, which
+inherit the driver's working directory and ``PYTHONPATH``, can import this
+package; otherwise Spark's stock ``pyspark.daemon`` runs.
 """
 
 from __future__ import annotations
 
+import importlib.machinery
 import os
 
 from pyspark.sql import SparkSession
@@ -62,6 +76,19 @@ def _cpus() -> int:
     return int(v) if v.isdigit() and int(v) > 0 else 0
 
 
+def _worker_daemon_conf(master: str) -> dict[str, str]:
+    """``spark.python.daemon.module`` for local workers that can import
+    this package from the driver's cwd or ``PYTHONPATH``, else nothing."""
+    pkg = __name__.rpartition(".")[0]
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    spec = importlib.machinery.PathFinder.find_spec(pkg, [d for d in dirs if d])
+    here = os.path.dirname(os.path.abspath(__file__))
+    if (master.startswith("local") and spec is not None and spec.origin
+            and os.path.samefile(os.path.dirname(spec.origin), here)):
+        return {"spark.python.daemon.module": f"{pkg}.pyworker"}
+    return {}
+
+
 def get_spark(app_name: str = "flink-realtime-data-eng-spark",
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
@@ -75,7 +102,7 @@ def get_spark(app_name: str = "flink-realtime-data-eng-spark",
     n = _cpus()
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{n}]" if n else "local[*]")
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in _COMMON.items():
+    for k, v in {**_COMMON, **_worker_daemon_conf(master)}.items():
         builder = builder.config(k, v)
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * n, 32) if n else 32

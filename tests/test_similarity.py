@@ -551,16 +551,20 @@ def test_cosine_null_contract(spark):
     # vector side scores 0.0 (its norm nulled the denominator and
     # when(den > 0, ·) fell through to the 0.0 branch); length-mismatched
     # non-null vectors score NULL (zip_with padded the dot with null while
-    # the denominator stayed positive).
+    # the denominator stayed positive). An empty or all-zero side makes the
+    # denominator 0, so those pairs score 0.0 even at unequal lengths.
     df = spark.createDataFrame(
         [(1, None, [1.0, 0.0]), (2, [1.0, 0.0], None), (3, None, None),
-         (4, [1.0, 0.0, 0.0], [1.0, 0.0]), (5, [0.0, 0.0], [1.0, 1.0])],
+         (4, [1.0, 0.0, 0.0], [1.0, 0.0]), (5, [0.0, 0.0], [1.0, 1.0]),
+         (6, [], [1.0]), (7, [1.0], []), (8, [0.0], [1.0, 1.0])],
         "i long, a array<float>, b array<float>")
     got = {r["i"]: r["c"] for r in
            df.select("i", similarity.cosine("a", "b").alias("c")).collect()}
     assert got[1] == 0.0 and got[2] == 0.0 and got[3] == 0.0  # null side
     assert got[4] is None                   # unequal lengths
     assert got[5] == 0.0                    # zero-norm side
+    assert got[6] == 0.0 and got[7] == 0.0  # empty side
+    assert got[8] == 0.0                    # zero-norm side, unequal lengths
 
 
 def test_lsh_signature_wide_vectors_match_narrow_prefix_planes(spark):
@@ -593,6 +597,23 @@ def test_lsh_signature_wide_vectors_match_narrow_prefix_planes(spark):
     import numpy as np
     for vid, v in vecs:
         assert got[vid] == ref_bucket(v)
+
+
+def test_lsh_sign_table_keeps_one_widest_table():
+    # Signs do not depend on the table width, so every width is a prefix
+    # slice of the widest table built so far; a narrower width never
+    # builds a table of its own.
+    import numpy as np
+
+    signs_for = similarity._sign_table(3)
+    wide = signs_for(1500)
+    assert wide.shape == (1500, 3)
+    for d in (1200, 1024, 7):
+        narrow = signs_for(d)
+        assert np.shares_memory(narrow, wide)
+        assert np.array_equal(narrow, wide[:d])
+        assert np.array_equal(narrow, np.array(
+            [similarity._plane_signs_py(p, d) for p in range(3)]).T)
 
 
 def test_nondeterministic_score_rejected_in_join_condition(spark):

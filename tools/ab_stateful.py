@@ -29,19 +29,16 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/frde_sf10"
     names = sys.argv[3:] or QUERIES
 
-    from pyspark.sql import SparkSession
     import flink_realtime_data_eng_spark.streaming.stateful as st
-    from flink_realtime_data_eng_spark import registry
+    from flink_realtime_data_eng_spark import registry, session
 
     spec = importlib.util.spec_from_file_location("old_stateful", old_path)
     old = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(old)
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.driver.memory", "48g")
-             .appName("ab_stateful").getOrCreate())
+    spark = session.get_spark("ab_stateful", shuffle_partitions=int(cpus),
+                              extra_conf={"spark.driver.memory": "48g"})
     spark.sparkContext.setLogLevel("ERROR")
 
     new_impl = {f: getattr(st, f) for f in FNS}

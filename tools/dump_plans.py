@@ -29,11 +29,8 @@ def main() -> None:
              if q in registry.QUERIES and q not in registry.STREAMING_DEMOS]
     heaviest = sorted(batch, key=lambda q: -timings[q])[:n]
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[4]")
-             .config("spark.sql.shuffle.partitions", "4")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    from flink_realtime_data_eng_spark.session import get_test_spark
+    spark = get_test_spark("dump_plans")
     sf_dir = "/root/testdata/sf0.001"
 
     out = ["# Physical plans — heaviest bench queries",

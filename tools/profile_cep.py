@@ -19,7 +19,7 @@ sys.path.insert(0, _HERE)
 
 import pandas as pd  # noqa: E402
 
-from pyspark.sql import SparkSession, types as T  # noqa: E402
+from pyspark.sql import types as T  # noqa: E402
 from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: E402
 
 
@@ -81,13 +81,12 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/frde_sf10"
     from flink_realtime_data_eng_spark.registry_ops import (
         _EVENTS_CSV_SCHEMA, _events_csv_dir, _run_to_memory)
+    from flink_realtime_data_eng_spark.session import get_spark
     from flink_realtime_data_eng_spark.sources import file_csv_stream
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.driver.memory", "48g")
-             .appName("profile_cep").getOrCreate())
+    spark = get_spark("profile_cep", shuffle_partitions=int(cpus),
+                      extra_conf={"spark.driver.memory": "48g"})
     spark.sparkContext.setLogLevel("ERROR")
     path = _events_csv_dir(spark, sf_dir)
 

@@ -197,16 +197,11 @@ def pick_queries() -> list[str]:
 
 
 def run(dst: str, only: list[str] | None = None) -> None:
-    from pyspark.sql import SparkSession
-
-    from flink_realtime_data_eng_spark import registry
+    from flink_realtime_data_eng_spark import registry, session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "48g")
-             .appName("scale_dryrun").getOrCreate())
+    spark = session.get_spark("scale_dryrun", shuffle_partitions=int(cpus),
+                              extra_conf={"spark.driver.memory": "48g"})
     spark.sparkContext.setLogLevel("ERROR")
 
     names = only or pick_queries()
@@ -248,16 +243,12 @@ def run_streams(dst: str, only: list[str] | None = None) -> None:
     the arrival replay end to end. Two passes per scale; the second is
     recorded (the first builds shared artifacts: symlink dirs, persisted
     indexes, JVM/codegen warmup)."""
-    from pyspark.sql import SparkSession
-
-    from flink_realtime_data_eng_spark import registry
+    from flink_realtime_data_eng_spark import registry, session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "48g")
-             .appName("scale_dryrun_streams").getOrCreate())
+    spark = session.get_spark("scale_dryrun_streams",
+                              shuffle_partitions=int(cpus),
+                              extra_conf={"spark.driver.memory": "48g"})
     spark.sparkContext.setLogLevel("ERROR")
 
     names = only or STREAM_HEAVY
