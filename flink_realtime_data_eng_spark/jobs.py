@@ -3,8 +3,9 @@
 A user of the reference runs ``flink run --class com.flinklearn.realtime.
 <chapter>.<Class>``; here each chapter is a builder that assembles
 source → operators → sink and returns the un-started writer(s). Call
-``.start()`` (or :func:`sinks.run_available_now` in tests) on each — the
-analog of ``env.execute()``.
+``.start()`` on each — the analog of ``env.execute()`` — or
+:func:`sinks.run_available_now`, which runs it to completion, waits, and
+raises ``TimeoutError`` if it hangs.
 
 Kafka-fed chapters accept ANY value-typed streaming DataFrame as the
 source argument, so tests inject a file-fixture stream and a production

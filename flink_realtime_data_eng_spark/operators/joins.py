@@ -174,12 +174,6 @@ def windowed_equi_join(left: DataFrame, right: DataFrame, key: str,
     return lsel.join(rsel, on=[key, "window_start_ms"], how=how)
 
 
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Star-schema helper: force the small dimension broadcast so the fact
-    table never shuffles for the join (the default plan at 100 TB)."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
-
-
 def range_lookup(fact: DataFrame, bands: DataFrame, value_col: str,
                  lo_col: str = "lo", hi_col: str = "hi") -> DataFrame:
     """Band/range lookup: map each fact row to the dimension band whose

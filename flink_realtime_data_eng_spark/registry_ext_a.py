@@ -33,6 +33,7 @@ from .registry_core import (  # noqa: F401
 from .registry_ops import (  # noqa: F401
     _EVENTS_CSV_SCHEMA,
     _FLUSH_TS_MS,
+    _drain_stream,
     _events_csv_dir,
     _run_to_memory,
     _run_to_parquet,
@@ -1055,16 +1056,12 @@ def x_manifest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     only committed batches are visible, so the round trip equals the
     batch filter exactly (the property Delta/Iceberg commit logs
     productionize)."""
-    from .sinks import manifest_file_sink, read_manifest, run_available_now
+    from .sinks import manifest_file_sink, read_manifest
     ev = _stream_events(spark, sf_dir)
     sel = (ev.filter(F.col("event_type") == "purchase")
              .select("event_id", "user_id", "ts_ms"))
     out_dir = _tempfile.mkdtemp(prefix="frde_manifest_")
-    ckpt = _tempfile.mkdtemp(prefix="frde_manifest_ckpt_")
-    q = run_available_now(manifest_file_sink(sel, out_dir, ckpt))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("manifest stream did not finish")
+    _drain_stream(spark, lambda ckpt: manifest_file_sink(sel, out_dir, ckpt))
     return read_manifest(spark, out_dir)
 
 
@@ -2573,14 +2570,9 @@ def x_late_capture_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                           max_files_per_trigger=1)
           .withColumn("ts", F.timestamp_millis(F.col("ts_ms"))))
     spill = _tempfile.mkdtemp(prefix="frde_late_spill_") + "/late"
-    ckpt = _tempfile.mkdtemp(prefix="frde_late_ckpt_")
     cap = LateDataCapture("ts", delay_ms=60_000, spill_path=spill)
-    q = (ev.writeStream.foreachBatch(cap)
-         .trigger(availableNow=True)
-         .option("checkpointLocation", ckpt).start())
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("late-capture replay did not finish")
+    _drain_stream(spark, lambda ckpt: ev.writeStream.foreachBatch(cap)
+                  .option("checkpointLocation", ckpt))
     if cap.late_count == 0:
         return spark.createDataFrame(
             [], "event_id long, user_id long, ts_ms long")

@@ -30,6 +30,7 @@ from .registry_core import (  # noqa: F401
 )
 from .registry_ops import (  # noqa: F401
     _EVENTS_CSV_SCHEMA,
+    _drain_stream,
     _events_csv_dir_flush,
     _run_to_memory,
     _stream_events,
@@ -1134,10 +1135,7 @@ def x_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # availableNow runs over a SHARED checkpoint is both the fix and the
     # restart-continuity demo (ST3): each run resumes from the committed
     # offset and the state store, like a nightly job catching up.
-    ckpt = _tempfile.mkdtemp(prefix="frde_ckpt_")
     out_dir = _tempfile.mkdtemp(prefix="frde_dsrc_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     def _sink(batch_df, batch_id):
         # Unconditional write: an empty micro-batch appends nothing, and
@@ -1145,16 +1143,12 @@ def x_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per batch (r6 ADVICE).
         batch_df.write.mode("append").parquet(out_dir)
 
-    try:
+    with _tempfile.TemporaryDirectory(prefix="frde_ckpt_") as ckpt:
         seen = -1
         for _ in range(12):
-            q = (agg.writeStream.outputMode("update")
-                 .foreachBatch(_sink)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("datasource stream batch hung")
+            _drain_stream(spark, lambda ck: (
+                agg.writeStream.outputMode("update").foreachBatch(_sink)
+                .option("checkpointLocation", ck)), ckpt)
             try:
                 got = spark.read.parquet(out_dir).count()
             except Exception:
@@ -1162,8 +1156,6 @@ def x_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             if got == seen:
                 break  # a run that emitted nothing: offsets at n
             seen = got
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     drained = spark.read.parquet(out_dir)
     return (drained.groupBy("user", "operation")
             .agg(F.max("n_events").cast("bigint").alias("n_events"),
@@ -1582,23 +1574,16 @@ def x_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks the checkpoint's contents value-for-value (state is
     read per-partition in parallel — it scales with the state's own
     partitioning, not the stream's history)."""
-    from .sinks import memory_sink, run_available_now
+    from .sinks import memory_sink
     ev = _stream_events(spark, sf_dir)
     agg = (ev.groupBy("user_id")
              .agg(F.count(F.lit(1)).cast("bigint").alias("total")))
     name = "frde_" + _uuid.uuid4().hex[:12]
-    ckpt = _tempfile.mkdtemp(prefix="frde_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        writer = (memory_sink(agg, name, "update")
-                  .option("checkpointLocation", ckpt))
-        q = run_available_now(writer)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(f"state fixture stream {name} timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # The state store is the result, read lazily after the drain returns,
+    # so this checkpoint outlives the drain.
+    ckpt = _tempfile.mkdtemp(prefix="frde_state_")
+    _drain_stream(spark, lambda ck: memory_sink(agg, name, "update")
+                  .option("checkpointLocation", ck), ckpt)
     st = spark.read.format("statestore").option("path", ckpt).load()
     return st.select(F.col("key.user_id").alias("user_id"),
                      F.col("value.count").cast("bigint").alias("total"))

@@ -391,6 +391,7 @@ def x_ann_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
     from .registry_ext_c import _ivfpq_index_dir
+    from .registry_ops import _drain_stream
     base = _ivfpq_index_dir(spark, sf_dir)
     codes = spark.read.parquet(os.path.join(base, "codes"))
     row = spark.read.parquet(os.path.join(base, "books")).collect()[0]
@@ -413,13 +414,8 @@ def x_ann_serve_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             codes, coarse, books, batch_df, emb, k=5, n_probe=3,
             shortlist=50).write.mode("append").parquet(out_dir)
 
-    q = (qs.writeStream.foreachBatch(_score)
-         .trigger(availableNow=True)
-         .option("checkpointLocation", out_dir + "_ckpt")
-         .start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("x_ann_serve_stream did not drain in 300s")
+    _drain_stream(spark, lambda ckpt: qs.writeStream.foreachBatch(_score)
+                  .option("checkpointLocation", ckpt))
     return spark.read.parquet(out_dir)
 
 
@@ -457,6 +453,7 @@ def x_leakage_guard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
               .filter(F.col("vec_id") % 20 != 0)
               .repartition(spark.sparkContext.defaultParallelism))
     import tempfile
+    from .registry_ops import _drain_stream
     out_dir = tempfile.mkdtemp(prefix="frde_leakguard_")
 
     def _check(batch_df, _batch_id):
@@ -469,13 +466,8 @@ def x_leakage_guard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df, bench, threshold=0.25, n_rows=corpus_n
         ).write.mode("append").parquet(out_dir)
 
-    q = (stream.writeStream.foreachBatch(_check)
-         .trigger(availableNow=True)
-         .option("checkpointLocation", out_dir + "_ckpt")
-         .start())
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("x_leakage_guard_stream did not drain in 300s")
+    _drain_stream(spark, lambda ckpt: stream.writeStream.foreachBatch(_check)
+                  .option("checkpointLocation", ckpt))
     return spark.read.parquet(out_dir)
 
 
@@ -1529,19 +1521,14 @@ def x_manifest_spec_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     table format: no OPTIMIZE pass needed before the table is
     queryable-fast."""
     import tempfile
-    from .registry_ext_a import _stream_events
-    from .sinks import (read_manifest, run_available_now,
-                        set_partition_spec, spec_manifest_sink)
+    from .registry_ops import _drain_stream, _stream_events
+    from .sinks import read_manifest, set_partition_spec, spec_manifest_sink
     ev = _stream_events(spark, sf_dir)
     sel = (ev.filter(F.col("event_type") == "purchase")
              .select("event_id", "user_id", "ts_ms"))
     out_dir = tempfile.mkdtemp(prefix="frde_specstream_")
-    ckpt = tempfile.mkdtemp(prefix="frde_specstream_ckpt_")
     set_partition_spec(out_dir, ["user_id"], bloom_cols=["event_id"])
-    q = run_available_now(spec_manifest_sink(sel, out_dir, ckpt))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("spec stream did not finish")
+    _drain_stream(spark, lambda ckpt: spec_manifest_sink(sel, out_dir, ckpt))
     mx = _events(spark, sf_dir).agg(
         F.max("user_id").alias("m")).collect()[0]["m"]  # 1-row bound
     lo, hi = int(mx) // 4, int(mx) // 2

@@ -263,6 +263,7 @@ def st2_action_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch stand-in.
 # ---------------------------------------------------------------------------
 
+import contextlib as _contextlib
 import os as _os
 import tempfile as _tempfile
 import uuid as _uuid
@@ -291,30 +292,39 @@ _EVENTS_CSV_SCHEMA = T.StructType([
 ])
 
 
+# State width of every registry stream. A stateful query takes its
+# state-store count from spark.sql.shuffle.partitions when it first starts
+# (the count is then frozen in the checkpoint's offset log), and each store
+# costs a fixed open/commit per micro-batch, so the width should track data
+# volume: 8 fits the fixture scale; a cluster deployment sizes it via
+# submit conf instead.
+_STATE_WIDTH = "8"
+
+
+def _drain_stream(spark: SparkSession, build, checkpoint: str | None = None):
+    """Run one registry stream to completion at :data:`_STATE_WIDTH` and
+    return the terminated query (``sinks.run_available_now`` raises on a
+    hang). ``build(checkpoint)`` returns the writer. Without
+    ``checkpoint`` the drain makes a temporary one and removes it on
+    return; pass one the caller reads or reuses afterwards."""
+    from .sinks import run_available_now
+    with (_contextlib.nullcontext(checkpoint) if checkpoint else
+          _tempfile.TemporaryDirectory(prefix="frde_ckpt_")) as ckpt:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", _STATE_WIDTH)
+        try:
+            return run_available_now(build(ckpt))
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def _run_to_memory(df: DataFrame, spark: SparkSession,
                    output_mode: str = "append") -> DataFrame:
-    """Drive a streaming DataFrame to completion into a memory table.
-
-    Shuffle partitions are clamped for the run: streaming state stores cost
-    per-partition fixed overhead (open/commit per micro-batch), so state
-    partitioning should track data volume — 8 is right for the fixture
-    scale; a cluster deployment sizes it via submit conf instead.
-    """
-    from .sinks import memory_sink, run_available_now
+    """Drive a streaming DataFrame to completion into a memory table."""
+    from .sinks import memory_sink
     name = "frde_" + _uuid.uuid4().hex[:12]
-    ckpt = _tempfile.mkdtemp(prefix="frde_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        writer = memory_sink(df, name, output_mode).option("checkpointLocation", ckpt)
-        q = run_available_now(writer)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                f"streaming round-trip {name} did not finish in 600 s — "
-                "result would be partial, refusing to return it")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain_stream(spark, lambda ckpt: memory_sink(df, name, output_mode)
+                  .option("checkpointLocation", ckpt))
     return spark.table(name)
 
 
@@ -325,26 +335,13 @@ def _run_to_parquet(df: DataFrame, spark: SparkSession) -> DataFrame:
     (dynamic sessionization emits ~one row per event): the memory sink
     funnels every row through a single driver collection, which at 100x
     SF dominated the replay wall and is a shape no production stream has
-    (K1 file sink is the production contract). Same availableNow drain,
-    same shuffle-clamp policy, append mode only (the parquet sink's own
+    (K1 file sink is the production contract). Same
+    :func:`_drain_stream`; append mode only (the parquet sink's own
     constraint)."""
-    from .sinks import run_available_now
     out = _tempfile.mkdtemp(prefix="frde_sout_")
-    ckpt = _tempfile.mkdtemp(prefix="frde_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-    try:
-        writer = (df.writeStream.format("parquet").option("path", out)
-                  .option("checkpointLocation", ckpt).outputMode("append"))
-        q = run_available_now(writer)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                f"streaming round-trip {out} did not finish in 600 s — "
-                "result would be partial, refusing to return it")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _drain_stream(spark, lambda ckpt: (
+        df.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt).outputMode("append")))
     return spark.read.parquet(out)
 
 

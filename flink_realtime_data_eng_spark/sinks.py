@@ -995,10 +995,23 @@ def expire_manifests(path: str, keep_last: int) -> dict:
             "orphans_removed": n_orphans}
 
 
+# Longest an availableNow drain may run before it counts as hung.
+AVAILABLE_NOW_TIMEOUT_S = 600
+
+
 def run_available_now(writer: DataStreamWriter) -> StreamingQuery:
     """Process everything currently available, then stop — the deterministic
-    trigger every test uses (never wall-clock ProcessingTime)."""
-    return writer.trigger(availableNow=True).start()
+    trigger every test uses (never wall-clock ProcessingTime). Returns the
+    terminated query; a query still running after
+    :data:`AVAILABLE_NOW_TIMEOUT_S` is stopped and raises ``TimeoutError``,
+    so no caller ever reads a partial result."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(AVAILABLE_NOW_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"availableNow query {q.name or q.id} did not finish in "
+            f"{AVAILABLE_NOW_TIMEOUT_S} s; its output would be partial")
+    return q
 
 
 def set_partition_spec(path: str, cluster_by: list[str],

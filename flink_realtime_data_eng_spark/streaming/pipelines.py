@@ -23,6 +23,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..sinks import run_available_now
+
 
 def stamp_arrival(df: DataFrame, col_name: str = "arrival_ts") -> DataFrame:
     """Processing-time semantics: stamp wall-clock arrival time at ingest
@@ -162,7 +164,7 @@ def interval_join_stream(left: DataFrame, right: DataFrame, key: str,
 
 
 def incremental_rollup(stream_df: DataFrame, spark, group_cols: Sequence[str],
-                       measure_col: str, timeout_sec: int = 600) -> DataFrame:
+                       measure_col: str) -> DataFrame:
     """Streaming materialized-view maintenance: drive ``stream_df`` to
     completion (availableNow), merging each micro-batch's partial
     aggregates into a running rollup keyed by ``group_cols`` — the
@@ -200,14 +202,9 @@ def incremental_rollup(stream_df: DataFrame, spark, group_cols: Sequence[str],
                    F.max("max_m").cast("bigint").alias("max_m")))
         state["mv"] = merged.localCheckpoint(eager=True)
 
-    ckpt = tempfile.mkdtemp(prefix="frde_mv_ckpt_")
-    q = (stream_df.writeStream.foreachBatch(merge)
-         .trigger(availableNow=True)
-         .option("checkpointLocation", ckpt).start())
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("incremental_rollup stream did not finish — "
-                           "MV would be partial, refusing to return it")
+    with tempfile.TemporaryDirectory(prefix="frde_mv_ckpt_") as ckpt:
+        run_available_now(stream_df.writeStream.foreachBatch(merge)
+                          .option("checkpointLocation", ckpt))
     mv = state["mv"]
     if mv is None:  # empty stream: zero-row MV with the right schema
         mv = (spark.createDataFrame([], stream_df.schema)

@@ -41,12 +41,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 
-def with_bounded_lateness(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
-    """W1: declare ``ts_col`` (TimestampType) as event time with a bounded
-    out-of-orderness ``delay`` (e.g. '10 seconds')."""
-    return df.withWatermark(ts_col, delay)
-
-
 class LateDataCapture:
     """W3: route late rows to a side output instead of silently dropping.
 

@@ -2514,3 +2514,53 @@ def test_mor_deletes_survive_checkpoint_and_expiry(spark, tmp_path):
     assert snap2.count() == 8
     assert snap2.filter("k = 0").count() == 0
     assert snap2.filter("k = 1").count() == 1
+
+
+def test_run_available_now_stops_and_raises_on_a_hang(spark, tmp_path,
+                                                      monkeypatch):
+    """A drain that outlives the timeout is stopped and raises instead of
+    returning a query whose output is partial."""
+    import time
+    monkeypatch.setattr(sinks, "AVAILABLE_NOW_TIMEOUT_S", 1)
+    src = tmp_path / "hang"
+    generators.generate_audit_files(str(src), n=3)
+    stream = sources.file_csv_stream(spark, str(src), AUDIT_TRAIL)
+    writer = (stream.writeStream.foreachBatch(lambda bdf, bid: time.sleep(4))
+              .option("checkpointLocation", str(tmp_path / "ck")))
+    with pytest.raises(TimeoutError):
+        sinks.run_available_now(writer)
+    assert spark.streams.active == []
+
+
+def test_registry_drain_sets_state_width_and_restores_session(spark,
+                                                              tmp_path):
+    """The registry drain runs every stream at its one state width and
+    leaves the session's width as it found it, also when the drain
+    raises."""
+    from flink_realtime_data_eng_spark import registry_ops
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        src = tmp_path / "width"
+        generators.generate_audit_files(str(src), n=20)
+        stream = sources.file_csv_stream(spark, str(src), AUDIT_TRAIL)
+        name = "w" + uuid.uuid4().hex[:12]
+        q = registry_ops._drain_stream(
+            spark, lambda ckpt: sinks.memory_sink(
+                stream.groupBy("user").count(), name, "update")
+            .option("checkpointLocation", ckpt))
+        ops = q.lastProgress["stateOperators"]
+        assert ops[0]["numShufflePartitions"] == int(registry_ops._STATE_WIDTH)
+        assert spark.conf.get(key) == "4"
+
+        def fail(batch_df, batch_id):
+            raise RuntimeError("sink failed")
+
+        with pytest.raises(Exception, match="sink failed"):
+            registry_ops._drain_stream(
+                spark, lambda ckpt: stream.writeStream.foreachBatch(fail)
+                .option("checkpointLocation", ckpt))
+        assert spark.conf.get(key) == "4"
+    finally:
+        spark.conf.set(key, prev)

@@ -29,6 +29,7 @@ sys.path.insert(0, _HERE)
 
 
 def main() -> None:
+    from bench import warmup
     from flink_realtime_data_eng_spark import registry
     from flink_realtime_data_eng_spark.session import get_spark
 
@@ -46,29 +47,7 @@ def main() -> None:
 
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    # Same warmup as bench.py: page cache + python workers + ML runtime.
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").write.mode(
-            "overwrite").format("noop").save()
-    from pyspark.sql import functions as F
-
-    def _identity(it):
-        yield from it
-
-    nw = spark.sparkContext.defaultParallelism
-    (spark.range(0, 8 * nw, 1, nw).withColumn("v", F.rand(42))
-     .mapInPandas(_identity, "id long, v double")
-     .write.mode("overwrite").format("noop").save())
-    for fixture in ["_clusters_parquet_dir", "_edges_parquet_dir",
-                    "_policy_tables_dir", "_pq_index_dir", "_ivfpq_index_dir",
-                    "_merge_table_dir", "_hll_day_registers_dir",
-                    "_dsir_weights_dir", "_expiry_table_dir",
-                    "_skipping_table_dir", "_zorder_table_dir",
-                    "_checkpoint_table_dir", "_bloom_table_dir",
-                    "_spec_evo_table_dir", "_schema_evo_table_dir",
-                    "_quality_verdict_dir"]:
-        getattr(registry, fixture)(spark, sf_dir)
+    warmup(spark, sf_dir)
 
     tracker = spark.sparkContext.statusTracker()
     rows = {}
