@@ -24,14 +24,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
-from .graph import counted_checkpoint
+from .graph import collect_at_most
 
-# Shingle rows up to which prefix_filter_pairs runs in one task. On 4 cores
-# the one task beat the distributed PPJoin at every size measured (2.1-2.6x
+# Shingle rows up to which prefix_filter_pairs runs on the driver. On 4
+# cores one task beat the distributed PPJoin at every size measured (2.1-2.6x
 # up to 2.08M rows; SCALE.md, x_prefix_filter_join); 2M is that measured
-# range, and the graph fixpoints' one-task size.
+# range, and the graph fixpoints' driver-path size.
 _PREFIX_ONE_TASK_ROWS = 2_000_000
 # Pair rows one kernel step holds at a time (~100 MB of int64 columns).
 _PAIR_CHUNK = 4_000_000
@@ -711,12 +710,12 @@ def _per_pair(key, m, last_a, last_b):
             np.maximum.reduceat(last_b[order], heads))
 
 
-def _ppjoin_in_one_task(sh: DataFrame, id_col: str, num: int,
-                        den: int) -> DataFrame:
-    """PPJoin over the whole shingle table ``sh`` ``(id_col, shingle)`` in
-    ONE task (``coalesce(1).mapInPandas``), for t = ``num/den``: overlap
-    counts ``(id_a, id_b, n_common, n_a, n_b)``, id_a < id_b, of the
-    candidate pairs whose Jaccard may round up to t.
+def _ppjoin(s: pd.DataFrame, id_col: str, num: int,
+            den: int) -> pd.DataFrame:
+    """PPJoin over the whole shingle table ``s`` ``(id_col, shingle)`` on
+    the driver, for t = ``num/den``: overlap counts ``(id_a, id_b,
+    n_common, n_a, n_b)``, id_a < id_b, of the candidate pairs whose
+    Jaccard may round up to t.
 
     Ids are factorized with ``sort=True``, so code order is value order
     (for strings, code-point order, which is Spark's UTF-8 binary order)
@@ -726,93 +725,83 @@ def _ppjoin_in_one_task(sh: DataFrame, id_col: str, num: int,
     stays lossless. Candidates are pairs sharing a prefix code that pass
     the length filter and two upper bounds on their overlap, all in exact
     integers; ``n_common`` is then counted exactly. NULL ids never pair
-    (as in Spark) and are dropped before the task."""
-    key = sh.schema[id_col].dataType
-    schema = StructType(
-        [StructField("id_a", key), StructField("id_b", key)]
-        + [StructField(c, LongType()) for c in ("n_common", "n_a", "n_b")])
-
-    def kernel(batches):
-        frames = list(batches)
-        if not frames:
-            return
-        s = pd.concat(frames, ignore_index=True)
-        doc, ids = pd.factorize(s[id_col], sort=True)
-        code, _ = pd.factorize(s["shingle"])
-        ids, n_docs, n_codes = np.asarray(ids), len(ids), int(code.max()) + 1
-        # rows grouped by doc, each doc's codes in (frequency, code) order
-        order = np.lexsort((code, np.bincount(code)[code], doc))
-        doc, code = doc[order], code[order]
-        size = np.bincount(doc, minlength=n_docs)
-        first = np.cumsum(size) - size
-        rank = np.arange(len(doc)) - first[doc]
-        n = size[doc]
-        # prefix rows: rank < n - ceil(t*n) + 1, ordered by (code, doc)
-        p = np.flatnonzero(rank < n - (n * num + den - 1) // den + 1)
-        p = p[np.lexsort((doc[p], code[p]))]
-        head = np.r_[True, code[p][1:] != code[p][:-1]]
-        group_end = np.r_[np.flatnonzero(head)[1:], len(p)][np.cumsum(head) - 1]
-        at = np.arange(len(p))
-        # per pair: m shared prefix codes, the ranks of the last of them
-        parts = [(np.empty(0, np.int64),) * 4]
-        for i, j in _expand(at + 1, group_end - at - 1):
-            ra, rb = p[i], p[j]
-            na, nb = n[ra], n[rb]
-            ok = ((doc[ra] < doc[rb])
-                  & (np.minimum(na, nb) * den >= np.maximum(na, nb) * num))
-            ra, rb = ra[ok], rb[ok]
-            parts.append(_per_pair(doc[ra] * n_docs + doc[rb],
-                                   np.ones(len(ra), np.int64),
-                                   rank[ra], rank[rb]))
-        cand, m, last_a, last_b = _per_pair(
-            *[np.concatenate(c) for c in zip(*parts)])
-        a, b = cand // n_docs, cand % n_docs
-        na, nb = size[a], size[b]
-        # Codes rank in one global order, so a code both docs share beyond
-        # the last shared prefix code ranks after it on BOTH sides: the
-        # overlap is m plus at most the shorter remaining suffix.
-        rest_a, rest_b = na - last_a - 1, nb - last_b - 1
-        alpha = (num * (na + nb) + num + den - 1) // (num + den)
-        ok = m + np.minimum(rest_a, rest_b) >= alpha
-        # Bucket bound (the count form of the bitmap filter, Sandes et al.
-        # 2020): codes fall into `width` buckets by code, and two docs
-        # share at most sum over buckets of min(their counts there). The
-        # width keeps the doc x bucket table to 16M cells.
-        width = int(np.clip((1 << 24) // n_docs, 1, 128))
-        counts = np.bincount(doc * width + code % width,
-                             minlength=n_docs * width)
-        counts = counts.reshape(n_docs, width).astype(
-            np.min_scalar_type(size.max()))
-        sel = np.flatnonzero(ok)
-        step = max(1, _PAIR_CHUNK // width)
-        for i in range(0, len(sel), step):
-            c = sel[i:i + step]
-            ok[c] = np.minimum(counts[a[c]], counts[b[c]]).sum(1) >= alpha[c]
-        cand, a, b, m = cand[ok], a[ok], b[ok], m[ok]
-        last_a, last_b, rest_a, rest_b = (last_a[ok], last_b[ok],
-                                          rest_a[ok], rest_b[ok])
-        # count the rest exactly: look the shorter suffix's codes up in the
-        # other doc's sorted (doc, code) keys
-        a_short = rest_a <= rest_b
-        x = np.where(a_short, a, b)
-        y = a + b - x
-        x_from = first[x] + np.where(a_short, last_a, last_b) + 1
-        keys = np.sort(doc * n_codes + code)
-        common = m
-        for k, pos in _expand(x_from, np.minimum(rest_a, rest_b)):
-            probe = y[k] * n_codes + code[pos]
-            hit = keys[np.minimum(np.searchsorted(keys, probe),
-                                  len(keys) - 1)] == probe
-            common += np.bincount(k[hit], minlength=len(cand))
-        na, nb = size[a], size[b]
-        # the tail's 6-dp rounding lifts a ratio up to 5e-7 below t onto t
-        keep = common >= (num / den - 1e-6) * (na + nb - common)
-        yield pd.DataFrame({"id_a": ids[a[keep]], "id_b": ids[b[keep]],
-                            "n_common": common[keep], "n_a": na[keep],
-                            "n_b": nb[keep]})
-
-    return (sh.filter(F.col(id_col).isNotNull()).coalesce(1)
-            .mapInPandas(kernel, schema))
+    (as in Spark): their rows are dropped first."""
+    s = s.dropna()
+    if s.empty:
+        return pd.DataFrame(columns=["id_a", "id_b", "n_common", "n_a", "n_b"])
+    doc, ids = pd.factorize(s[id_col], sort=True)
+    code, _ = pd.factorize(s["shingle"])
+    ids, n_docs, n_codes = np.asarray(ids), len(ids), int(code.max()) + 1
+    # rows grouped by doc, each doc's codes in (frequency, code) order
+    order = np.lexsort((code, np.bincount(code)[code], doc))
+    doc, code = doc[order], code[order]
+    size = np.bincount(doc, minlength=n_docs)
+    first = np.cumsum(size) - size
+    rank = np.arange(len(doc)) - first[doc]
+    n = size[doc]
+    # prefix rows: rank < n - ceil(t*n) + 1, ordered by (code, doc)
+    p = np.flatnonzero(rank < n - (n * num + den - 1) // den + 1)
+    p = p[np.lexsort((doc[p], code[p]))]
+    head = np.r_[True, code[p][1:] != code[p][:-1]]
+    group_end = np.r_[np.flatnonzero(head)[1:], len(p)][np.cumsum(head) - 1]
+    at = np.arange(len(p))
+    # per pair: m shared prefix codes, the ranks of the last of them
+    parts = [(np.empty(0, np.int64),) * 4]
+    for i, j in _expand(at + 1, group_end - at - 1):
+        ra, rb = p[i], p[j]
+        na, nb = n[ra], n[rb]
+        ok = ((doc[ra] < doc[rb])
+              & (np.minimum(na, nb) * den >= np.maximum(na, nb) * num))
+        ra, rb = ra[ok], rb[ok]
+        parts.append(_per_pair(doc[ra] * n_docs + doc[rb],
+                               np.ones(len(ra), np.int64),
+                               rank[ra], rank[rb]))
+    cand, m, last_a, last_b = _per_pair(
+        *[np.concatenate(c) for c in zip(*parts)])
+    a, b = cand // n_docs, cand % n_docs
+    na, nb = size[a], size[b]
+    # Codes rank in one global order, so a code both docs share beyond
+    # the last shared prefix code ranks after it on BOTH sides: the
+    # overlap is m plus at most the shorter remaining suffix.
+    rest_a, rest_b = na - last_a - 1, nb - last_b - 1
+    alpha = (num * (na + nb) + num + den - 1) // (num + den)
+    ok = m + np.minimum(rest_a, rest_b) >= alpha
+    # Bucket bound (the count form of the bitmap filter, Sandes et al.
+    # 2020): codes fall into `width` buckets by code, and two docs
+    # share at most sum over buckets of min(their counts there). The
+    # width keeps the doc x bucket table to 16M cells.
+    width = int(np.clip((1 << 24) // n_docs, 1, 128))
+    counts = np.bincount(doc * width + code % width,
+                         minlength=n_docs * width)
+    counts = counts.reshape(n_docs, width).astype(
+        np.min_scalar_type(size.max()))
+    sel = np.flatnonzero(ok)
+    step = max(1, _PAIR_CHUNK // width)
+    for i in range(0, len(sel), step):
+        c = sel[i:i + step]
+        ok[c] = np.minimum(counts[a[c]], counts[b[c]]).sum(1) >= alpha[c]
+    cand, a, b, m = cand[ok], a[ok], b[ok], m[ok]
+    last_a, last_b, rest_a, rest_b = (last_a[ok], last_b[ok],
+                                      rest_a[ok], rest_b[ok])
+    # count the rest exactly: look the shorter suffix's codes up in the
+    # other doc's sorted (doc, code) keys
+    a_short = rest_a <= rest_b
+    x = np.where(a_short, a, b)
+    y = a + b - x
+    x_from = first[x] + np.where(a_short, last_a, last_b) + 1
+    keys = np.sort(doc * n_codes + code)
+    common = m
+    for k, pos in _expand(x_from, np.minimum(rest_a, rest_b)):
+        probe = y[k] * n_codes + code[pos]
+        hit = keys[np.minimum(np.searchsorted(keys, probe),
+                              len(keys) - 1)] == probe
+        common += np.bincount(k[hit], minlength=len(cand))
+    na, nb = size[a], size[b]
+    # the tail's 6-dp rounding lifts a ratio up to 5e-7 below t onto t
+    keep = common >= (num / den - 1e-6) * (na + nb - common)
+    return pd.DataFrame({"id_a": ids[a[keep]], "id_b": ids[b[keep]],
+                         "n_common": common[keep], "n_a": na[keep],
+                         "n_b": nb[keep]})
 
 
 def prefix_filter_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
@@ -834,34 +823,29 @@ def prefix_filter_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     matches the full-self-join :func:`jaccard_pairs` result. That match
     is the oracle: DuckDB replays the plain exact join.
 
-    Two execution paths, chosen from the shingle table's MEASURED row
-    count (counted by the job that checkpoints the table, so the switch
-    costs no extra job):
+    Two execution paths, chosen by one bounded collect of the shingle
+    table (:func:`graph.collect_at_most`):
 
-    - At most ``_PREFIX_ONE_TASK_ROWS`` rows (every bench-scale corpus;
-      sf0.1 has 260k): the whole join runs in ONE task
-      (:func:`_ppjoin_in_one_task`) on factorized shingle codes in numpy,
-      with the same prefix rule and length/positional filters and an
-      exact overlap count per candidate. Construction then runs only the
-      checkpoint; the kernel runs when the result executes. At this size
-      the distributed path's cost is its ~14 eager Spark jobs, not data
-      (break-even measured in SCALE.md, x_prefix_filter_join).
-    - Larger tables run the distributed PPJoin below, the only path that
-      grows past one task. Its tier-1 fingerprint screen is its only loss
-      mode: >= 2 within-pair 64-bit hash collisions (expected < 1e-20 at
-      10^12 candidate pairs; the prefix/length/positional filters
-      themselves are strictly lossless).
+    - At most ``_PREFIX_ONE_TASK_ROWS`` rows with a non-NULL id (every
+      bench-scale corpus; sf0.1 has 260k): that one collect ships the
+      table to the driver, where :func:`_ppjoin` runs the same prefix
+      rule and length/positional filters in numpy and counts each
+      candidate's overlap exactly; the overlaps come back as one
+      partition. At this size the distributed path's cost is its ~14
+      eager Spark jobs, not data (SCALE.md, x_prefix_filter_join).
+    - Larger tables run the distributed PPJoin below, after the probe's
+      extra pass over the corpus (at most 2M + 1 rows fetched). Its
+      tier-1 fingerprint screen is its only loss mode: >= 2 within-pair
+      64-bit hash collisions (expected < 1e-20 at 10^12 candidate pairs;
+      the prefix/length/positional filters are strictly lossless).
 
     Both paths finish with the same rounding tail
     (:func:`_jaccard_at_least`).
 
-    Distributed path, r10 redesign (profiled at sf0.1/sf1/sf10 — the r9
-    watch item): the original verify self-joined the candidate-doc
-    shingle table on the shingle string, which is O(sum of
-    posting-list^2) over shingles the candidate docs share — at 10x scale
-    that stage was ~75% of the wall-clock and the reason the measured
-    exponent sat at 0.85/decade.
-    Three lossless tightenings (Xiao et al. WWW'08 PPJoin):
+    Distributed path: three lossless tightenings (Xiao et al. WWW'08
+    PPJoin) replace a verify that self-joined the candidate docs'
+    shingles, O(sum of posting-list^2) (profile in SCALE.md,
+    x_prefix_filter_join r10 redesign):
 
     1. LENGTH filter in the candidate join: J >= t forces
        min(|x|,|y|) >= t * max(|x|,|y|) (c <= min and c >= t*max), checked
@@ -893,18 +877,23 @@ def prefix_filter_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     posting lists) so frequent-shingle hubs never enter the self-join;
     verify work is proportional to surviving candidates, not to shared
     posting lists. Ties in document frequency break on the shingle
-    string: total order, engine-independent. Measured sf1 wall: 52 s ->
-    35 s; verify stage 26 s -> 10 s (fp tier) + ~2 s (exact tier).
+    string: total order, engine-independent.
     """
     from pyspark.sql import Window as W
     # t as an exact rational num/den (round-half covers any threshold
     # given to <=6 decimals): every filter below compares integers.
     _den = 1_000_000
     _num = int(round(threshold * _den))
-    sh, rows = counted_checkpoint(shingles(df, n, text_col, id_col))
-    if rows <= _PREFIX_ONE_TASK_ROWS:
-        return _jaccard_at_least(_ppjoin_in_one_task(sh, id_col, _num, _den),
-                                 threshold)
+    sh = shingles(df, n, text_col, id_col)
+    s = collect_at_most(sh.filter(F.col(id_col).isNotNull()),
+                        _PREFIX_ONE_TASK_ROWS)
+    if s is not None:
+        key = sh.schema[id_col].dataType.simpleString()
+        ov = df.sparkSession.createDataFrame(
+            _ppjoin(s, id_col, _num, _den),
+            f"id_a {key}, id_b {key}, n_common long, n_a long, n_b long")
+        return _jaccard_at_least(ov.coalesce(1), threshold)
+    sh = sh.localCheckpoint(eager=True)
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_freq"))
     # n_sh as an unbounded window count over the SAME doc partitioning the
     # rank sort already established — the separate per-doc sizes aggregate

@@ -11,21 +11,22 @@ implements synchronous min-label propagation:
 repeated to a fixpoint, which needs O(component diameter) rounds;
 near-dup components are shallow (dozens of docs, diameter a few hops).
 
-Two execution paths, chosen per call from the symmetric edge frame's
-MEASURED row count (taken while it is checkpointed, so the switch costs
-no extra job):
+Two execution paths, chosen per call by one bounded collect
+(:func:`collect_at_most`):
 
-- ``_fixpoint_width(rows) == 1`` (at most ``_FIXPOINT_ROWS_PER_PARTITION``
-  = 2M rows; every bench-scale pair graph): the whole fixpoint runs in ONE
-  task (:func:`_in_one_task` — ``coalesce(1).mapInPandas``). The node keys
-  are factorized to sorted integer codes and the same synchronous rounds
-  replay in numpy. At this scale a fixpoint's cost is per-round Spark job
-  scheduling, not data, so this turns ~rounds x 1-2 driver jobs into one.
-- Larger frames run the distributed loop: each round is one shuffle join
+- Up to ``_FIXPOINT_ROWS_PER_PARTITION`` = 2M edge rows counted in both
+  directions (every bench-scale pair graph): one Spark action ships the
+  NULL-free edges to the driver, where the same synchronous rounds replay
+  in numpy on sorted integer codes (:func:`_label_fixpoint`). At this
+  scale a fixpoint's cost is Spark job scheduling, not data, so the whole
+  fixpoint costs that one action. The labels come back as one partition,
+  so later joins and sorts add no exchange on their side.
+- Larger graphs run the distributed loop: each round is one shuffle join
   + one aggregation on a plan whose width (:func:`_distribute`) is sized
-  from the same row count; the driver only reads a scalar change count per
-  round, and ``localCheckpoint`` truncates the lineage each round so plan
-  size stays constant.
+  from the counted symmetric edge frame (:func:`counted_checkpoint`); the
+  driver only reads a scalar change count per round, and
+  ``localCheckpoint`` truncates the lineage each round so plan size stays
+  constant. The probe first costs one more pass over the edges.
 
 Both paths return the same rows and honour the same ``max_iter``
 contract. :func:`label_propagation` (community detection) takes the same
@@ -33,9 +34,9 @@ switch through the same helper.
 
 A chain longer than ``max_iter`` hops raises ``RuntimeError`` rather
 than returning a half-converged labeling. Below 2M rows a round costs
-nothing extra (it is one numpy pass inside the single task), so only the
-round bound, not cost, limits min-label on long chains; raise
-``max_iter`` for such graphs.
+nothing extra (one numpy pass on the driver), so only the round bound,
+not cost, limits min-label on long chains; raise ``max_iter`` for such
+graphs.
 """
 
 from __future__ import annotations
@@ -45,13 +46,12 @@ import itertools
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
 # Target rows per shuffle partition inside fixpoint loops: ~2M edge/label
 # rows ≈ 50-100 MB — the guide's 100 MB-1 GB shuffle-partition sizing,
 # derived from the MEASURED frame size rather than the session default
 # (which is sized for corpus-scale scans, not pair-scale fixpoints). A
-# frame that fits in one such partition runs its fixpoint in one task.
+# graph that fits in one such partition runs its fixpoint on the driver.
 _FIXPOINT_ROWS_PER_PARTITION = 2_000_000
 
 # Unique observed-metric names for counted_checkpoint's row counts.
@@ -122,44 +122,60 @@ def _symmetric(edges: DataFrame, src: str, dst: str,
     return counted_checkpoint(sym)
 
 
-def _in_one_task(sym: DataFrame, step, max_rounds: int) -> DataFrame:
-    """Run a synchronous label fixpoint over the whole edge frame ``sym``
-    ``(a, b)`` in ONE task and return ``(node, label, rounds)``.
+def collect_at_most(df: DataFrame, bound: int) -> pd.DataFrame | None:
+    """``df`` as one pandas frame on the driver, or ``None`` when it has
+    more than ``bound`` rows: one Spark action either way (plus any
+    shuffle stage ``df`` already has), shipping at most ``bound + 1``
+    rows. An integer column must hold no NULL (pandas would make it float
+    and lose ids above 2**53)."""
+    out = df.limit(bound + 1).toPandas()
+    return None if len(out) > bound else out
 
-    The node keys are factorized with ``sort=True``, so code order is value
+
+def _label_fixpoint(e: pd.DataFrame, step,
+                    max_rounds: int) -> tuple[pd.DataFrame, int]:
+    """A synchronous label fixpoint over the undirected edge rows ``e``
+    ``(a, b)``: ``(node, label)`` and the round that changed nothing, or
+    ``max_rounds + 1`` when none did (what the distributed min-label loop
+    would have counted). NULL endpoints are dropped; a repeated edge stays
+    repeated (one vote per row for label propagation).
+
+    Node keys are factorized with ``sort=True``, so code order is value
     order (for strings, code-point order, which is Spark's UTF-8 binary
-    order): a label picked by min or by ascending tie-break on codes is the
-    one the distributed loop picks on values. Every node starts labelled
-    with itself; ``step(label, a, b)`` maps the label codes of one round to
-    the next and is applied until a round changes nothing or
-    ``max_rounds`` rounds have run. ``rounds`` (the same on every row) is
-    the round that changed nothing, or ``max_rounds + 1`` when none did —
-    the count the distributed min-label loop would have paid. An empty
-    ``sym`` yields no rows."""
-    key = sym.schema["a"].dataType
-    schema = StructType([StructField("node", key), StructField("label", key),
-                         StructField("rounds", IntegerType())])
+    order) and a min or ascending tie-break on codes picks what the
+    distributed loop picks on values. Every node starts labelled with
+    itself; ``step(label, a, b)`` maps one round's label codes to the next
+    until a round changes nothing or ``max_rounds`` rounds have run."""
+    e = e.dropna()
+    codes, keys = pd.factorize(pd.concat([e["a"], e["b"]]), sort=True)
+    a, b = codes, np.roll(codes, len(e))  # every row in both directions
+    keys = np.asarray(keys)
+    label = np.arange(len(keys))
+    rounds = max_rounds + 1
+    for r in range(1, max_rounds + 1):
+        nxt = step(label, a, b)
+        if np.array_equal(nxt, label):
+            rounds = r
+            break
+        label = nxt
+    return pd.DataFrame({"node": keys, "label": keys[label]}), rounds
 
-    def kernel(batches):
-        frames = list(batches)
-        if not frames:
-            return
-        e = pd.concat(frames, ignore_index=True)
-        codes, keys = pd.factorize(pd.concat([e["a"], e["b"]]), sort=True)
-        a, b = codes[:len(e)], codes[len(e):]
-        keys = np.asarray(keys)
-        label = np.arange(len(keys))
-        rounds = max_rounds + 1
-        for r in range(1, max_rounds + 1):
-            nxt = step(label, a, b)
-            if np.array_equal(nxt, label):
-                rounds = r
-                break
-            label = nxt
-        yield pd.DataFrame({"node": keys, "label": keys[label],
-                            "rounds": rounds})
 
-    return sym.coalesce(1).mapInPandas(kernel, schema)
+def _small_fixpoint(edges: DataFrame, src: str, dst: str, step,
+                    max_rounds: int) -> tuple[DataFrame, int] | None:
+    """:func:`_label_fixpoint` over ``edges`` as a one-partition ``(node,
+    label)`` frame plus its rounds, or ``None`` when the edges exceed
+    ``_FIXPOINT_ROWS_PER_PARTITION`` rows counted in both directions. One
+    direction is shipped, NULL endpoints dropped first."""
+    one = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna()
+    e = collect_at_most(one, _FIXPOINT_ROWS_PER_PARTITION // 2)
+    if e is None:
+        return None
+    # coalesce widens both endpoints to one key type, as a union would
+    key = edges.select(F.coalesce(src, dst)).schema[0].dataType.simpleString()
+    labels, rounds = _label_fixpoint(e, step, max_rounds)
+    out = edges.sparkSession.createDataFrame(labels, f"node {key}, label {key}")
+    return out.coalesce(1), rounds
 
 
 def _min_label_round(label, a, b):
@@ -175,12 +191,12 @@ def _majority_round(label, a, b):
     frequent among its neighbours (every edge row is one vote), ties going
     to the smallest label."""
     n = len(label)
-    # (node, label) as one int64 key: n is at most the 2M one-task rows.
+    # (node, label) as one int64 key: n is at most the 2M driver-path rows.
     pair, votes = np.unique(a * n + label[b], return_counts=True)
     node, lbl = pair // n, pair % n
     first = np.lexsort((lbl, -votes, node))
     node, lbl = node[first], lbl[first]
-    head = np.r_[True, node[1:] != node[:-1]]
+    head = np.diff(node, prepend=-1) != 0
     nxt = label.copy()
     nxt[node[head]] = lbl[head]
     return nxt
@@ -194,20 +210,13 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     Returns ``(node, label)``. Deterministic: min is order-insensitive.
     Edges with a NULL endpoint are ignored. Raises if the fixpoint is not
     reached within ``max_iter`` rounds (returning half-propagated labels
-    would silently split components). Runs in one task up to 2M symmetric
-    edge rows, as a distributed loop above (module docstring).
+    would silently split components). Runs on the driver up to 2M
+    both-direction edge rows, as a distributed loop above (module
+    docstring).
     """
-    sym, n = _symmetric(edges, src, dst)
-    width = _fixpoint_width(n)
-    if width == 1:
-        # Lazy checkpoint + one max: the max is the materializing action,
-        # so the whole fixpoint and its convergence check cost ONE job.
-        out = _in_one_task(sym, _min_label_round, max_iter) \
-            .localCheckpoint(eager=False)
-        rounds = out.agg(F.max("rounds")).first()[0] or 1
-        labels = out.select("node", "label")
-    else:
-        labels, rounds = _min_label_loop(sym, width, max_iter)
+    labels, rounds = (
+        _small_fixpoint(edges, src, dst, _min_label_round, max_iter)
+        or _min_label_loop(*_symmetric(edges, src, dst), max_iter))
     if rounds > max_iter:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds — "
@@ -215,10 +224,12 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     return labels
 
 
-def _min_label_loop(sym: DataFrame, width: int,
+def _min_label_loop(sym: DataFrame, n: int,
                     max_iter: int) -> tuple[DataFrame, int]:
-    """The distributed min-label fixpoint: returns the labels and the round
-    that changed nothing (``max_iter + 1`` if none did within the bound)."""
+    """The distributed min-label fixpoint over the ``n``-row ``sym``:
+    returns the labels and the round that changed nothing (``max_iter +
+    1`` if none did within the bound)."""
+    width = _fixpoint_width(n)
     # shuffle_hash on the loop join sides: a localCheckpoint output has no
     # known partitioning, so without the hint AQE plans each round as a
     # BroadcastHashJoin whose broadcast exchange materializes as an EXTRA
@@ -266,13 +277,13 @@ def label_propagation(edges: DataFrame, src: str = "id_a",
     tie order make the result a pure function of the edge list.
 
     Returns ``(node, label)`` for every node of the graph. Takes the same
-    size switch as :func:`connected_components`: at most 2M symmetric edge
-    rows run in one task, larger graphs run one edge join + one (node,
-    label) count + one argmax window per round."""
-    sym, n = _symmetric(edges, src, dst, distinct=False)
-    if _fixpoint_width(n) == 1:
-        return _in_one_task(sym, _majority_round, rounds) \
-            .select("node", "label")
+    size switch as :func:`connected_components`: at most 2M both-direction
+    edge rows run on the driver, larger graphs run one edge join + one
+    (node, label) count + one argmax window per round."""
+    small = _small_fixpoint(edges, src, dst, _majority_round, rounds)
+    if small is not None:
+        return small[0]
+    sym, _ = _symmetric(edges, src, dst, distinct=False)
     labels = (sym.select(F.col("a").alias("node")).distinct()
               .withColumn("label", F.col("node")))
     w = Window.partitionBy("a").orderBy(F.col("n").desc(), F.col("label"))

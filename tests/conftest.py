@@ -1,10 +1,11 @@
 from __future__ import annotations
 
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from flink_realtime_data_eng_spark.session import get_test_spark
 

@@ -93,9 +93,9 @@ def test_connected_components_basic(spark):
 
 def _on_path(monkeypatch, path, sym_rows):
     """Route graph fixpoints over a ``sym_rows``-row symmetric edge frame to
-    ``path``: 'one_task' is the default for any small graph; 'loop' lowers
-    the one-task bound so the distributed loop runs at width 3 (a bound of
-    1 would mean one partition per row)."""
+    ``path``: 'one_task' (the driver path) is the default for any small
+    graph; 'loop' lowers the driver-path bound so the distributed loop
+    runs at width 3 (a bound of 1 would mean one partition per row)."""
     from flink_realtime_data_eng_spark.functions import graph
     if path == "loop":
         monkeypatch.setattr(graph, "_FIXPOINT_ROWS_PER_PARTITION",
@@ -190,15 +190,25 @@ def _jobs_run_by(spark, group, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_connected_components_small_graph_runs_in_three_jobs(spark):
-    """A small graph converges in ONE task whatever its diameter: one job
-    pair materializes and counts the symmetric edges, one runs the whole
-    fixpoint and reads its round count — not a job or two per round."""
+def test_connected_components_small_graph_runs_in_one_job(spark):
+    """A small graph converges on the driver whatever its diameter: one
+    job ships its edges there, and the fixpoint and its round count cost
+    no further job — not a job or two per round."""
     from flink_realtime_data_eng_spark.functions.graph import connected_components
     edges = spark.createDataFrame([(i, i + 1) for i in range(19)],
                                   "id_a long, id_b long")
     assert _jobs_run_by(spark, "cc-job-count",
-                        lambda: connected_components(edges)) <= 3
+                        lambda: connected_components(edges)) <= 1
+
+
+def test_label_propagation_small_graph_runs_in_one_job(spark):
+    """Label propagation takes the same driver path: one job for any
+    number of rounds."""
+    from flink_realtime_data_eng_spark.functions.graph import label_propagation
+    edges = spark.createDataFrame([(i, i + 1) for i in range(19)],
+                                  "id_a long, id_b long")
+    assert _jobs_run_by(spark, "lpa-job-count",
+                        lambda: label_propagation(edges, rounds=8)) <= 1
 
 
 def _lpa_reference(pairs, rounds):
@@ -557,9 +567,9 @@ def test_full_dedup_policy_flag_consistency(spark):
 
 
 def _prefix_path(monkeypatch, path):
-    """Route prefix_filter_pairs to ``path``: 'one_task' is the default
-    for any small corpus; 'distributed' lowers the one-task bound below
-    every shingle-row count."""
+    """Route prefix_filter_pairs to ``path``: 'one_task' (the driver path)
+    is the default for any small corpus; 'distributed' lowers the
+    driver-path bound below every shingle-row count."""
     if path == "distributed":
         monkeypatch.setattr(dedup, "_PREFIX_ONE_TASK_ROWS", -1)
 
@@ -630,9 +640,10 @@ def test_prefix_filter_edge_inputs_match_reference(spark, monkeypatch,
 
 
 def test_prefix_filter_pairs_constructs_in_three_jobs(spark):
-    """Below the one-task bound, building the query runs only the
-    document read and the counted shingle checkpoint; the join itself
-    runs when the result executes (the distributed path ran ~14 jobs)."""
+    """Below the driver-path bound, building the query runs only the
+    document read and the one bounded collect of the shingle table (two
+    jobs: the document source's repartition is its own stage), and the
+    join runs on the driver (the distributed path ran ~14 jobs)."""
     from flink_realtime_data_eng_spark.schemas import load_table
 
     def build():

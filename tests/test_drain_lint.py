@@ -1,6 +1,7 @@
 """Stream-drain lint: sinks.run_available_now is the only code that waits
-on a streaming query, and the registry drain is the only query code that
-sets the state width.
+on a streaming query, the registry drain is the only query code that
+sets the state width, and a test that waits on its own query asserts
+that the wait finished.
 
 A site that awaits its own query picks its own timeout and may forget to
 stop the query on a hang; a site that sets ``spark.sql.shuffle.partitions``
@@ -18,6 +19,7 @@ import pytest
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "flink_realtime_data_eng_spark"
 MODULES = sorted(PKG.rglob("*.py"))
+TESTS = sorted((ROOT / "tests").glob("*.py"))
 WIDTH_KEY = "spark.sql.shuffle.partitions"
 # Functions allowed to name the width key, outside session.py's profiles.
 WIDTH_SETTERS = {"registry_ops.py": {"_drain_stream"}}
@@ -66,3 +68,17 @@ def test_no_stream_width_env_var():
     code = [*MODULES, *ROOT.glob("*.py"), *(ROOT / "tools").glob("*.py"),
             *(ROOT / "tests").glob("*.py")]
     assert [p.name for p in code if var in p.read_text()] == []
+
+
+@pytest.mark.parametrize("path", TESTS, ids=lambda p: p.name)
+def test_test_waits_are_asserted(path):
+    """A bare ``q.awaitTermination(t)`` returns False on a hang and the
+    test goes on to assert on partial output; drain through
+    sinks.run_available_now, or assert the wait where the query must be
+    started by hand (e.g. to bind it before its first batch)."""
+    tree = ast.parse(path.read_text())
+    asserted = {id(n.test) for n in ast.walk(tree) if isinstance(n, ast.Assert)}
+    bare = [n.lineno for n in ast.walk(tree)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "awaitTermination" and id(n) not in asserted]
+    assert bare == [], f"{path.name}: unchecked awaitTermination at {bare}"

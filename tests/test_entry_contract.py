@@ -5,12 +5,13 @@ CORRECTNESS err row next round)."""
 
 from __future__ import annotations
 
+import pathlib
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 

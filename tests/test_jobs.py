@@ -14,8 +14,7 @@ BASE = 1_700_000_000_000
 
 def _drain(spark, df, output_mode="append"):
     name = "j" + uuid.uuid4().hex[:12]
-    q = sinks.run_available_now(sinks.memory_sink(df, name, output_mode))
-    q.awaitTermination(120)
+    sinks.run_available_now(sinks.memory_sink(df, name, output_mode))
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -24,8 +23,7 @@ def test_basic_streaming_job(spark, tmp_path):
     generators.generate_audit_files(str(src), n=15, step_ms=1000)
     writer = jobs.basic_streaming(spark, str(src), str(tmp_path / "out"),
                                   str(tmp_path / "ckpt"))
-    q = sinks.run_available_now(writer)
-    q.awaitTermination(120)
+    sinks.run_available_now(writer)
     got = (spark.read.schema("window_start_ms long, cnt long")
            .csv(str(tmp_path / "out")).collect())
     # 15 rec / 5 s windows -> windows 0,5000 finalized (10000 withheld).

@@ -12,13 +12,8 @@ from __future__ import annotations
 
 import pytest
 
-from flink_realtime_data_eng_spark import generators, kafka_standin, sources
-
-
-def _drain(writer, query_name=None):
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination(120)
-    return q
+from flink_realtime_data_eng_spark import (generators, kafka_standin, sinks,
+                                           sources)
 
 
 def test_source_schema_parity_with_real_kafka(spark, tmp_path):
@@ -46,7 +41,7 @@ def test_s4_records_through_s2_deserialization(spark, tmp_path):
     writer = (stream.writeStream.format("memory")
               .queryName("kafka_standin_vals")
               .option("checkpointLocation", str(tmp_path / "ck")))
-    _drain(writer)
+    sinks.run_available_now(writer)
     got = {r["value"] for r in
            spark.sql("SELECT value FROM kafka_standin_vals").collect()}
     assert got == {v for _, v in records}
@@ -95,7 +90,7 @@ def test_k2_sink_contract_and_roundtrip(spark, tmp_path):
     writer = kafka_standin.standin_sink(
         lines.select(F.substring("value", 1, 1).alias("key"), "value"),
         topic_dir, "t2", str(tmp_path / "ck2"))
-    _drain(writer)
+    sinks.run_available_now(writer)
     back = kafka_standin.read_batch(spark, topic_dir)
     vals = {bytes(r["value"]).decode() for r in back.collect()}
     assert vals == {"alpha", "beta", "gamma"}
@@ -104,5 +99,5 @@ def test_k2_sink_contract_and_roundtrip(spark, tmp_path):
     writer2 = kafka_standin.standin_sink(
         lines.select(F.substring("value", 1, 1).alias("key"), "value"),
         topic_dir, "t2", str(tmp_path / "ck2"))
-    _drain(writer2)
+    sinks.run_available_now(writer2)
     assert kafka_standin.read_batch(spark, topic_dir).count() == 4

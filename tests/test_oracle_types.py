@@ -18,11 +18,14 @@ the sf0.01 hash gate until a checker-environment change exposed them:
 
 from __future__ import annotations
 
+import pathlib
+
 import duckdb
 import pytest
 
 from flink_realtime_data_eng_spark import registry
 
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -162,7 +165,7 @@ def test_content_hashes_independent_of_import_order():
     import subprocess
     import sys
     code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {str(ROOT)!r})\n"
         "from tools.query_hashes import content_hashes\n"
         "fresh = content_hashes()\n"
         "import importlib, pkgutil\n"

@@ -35,8 +35,7 @@ def test_stateful_stream_one_key_spanning_many_arrow_chunks(spark, tmp_path):
         session_start=None, session_end=None, order_by=["ts_ms", "eid"])
     import uuid
     name = "big" + uuid.uuid4().hex[:8]
-    q = sinks.run_available_now(sinks.memory_sink(out, name))
-    q.awaitTermination(300)
+    sinks.run_available_now(sinks.memory_sink(out, name))
     result = spark.sql(f"SELECT * FROM {name}")
 
     batch = spark.createDataFrame(

@@ -23,8 +23,7 @@ from flink_realtime_data_eng_spark.streaming import pipelines, stateful, waterma
 def _mem(spark, df, output_mode="append"):
     """Run df → fresh memory sink to completion; return the result rows."""
     name = "m" + uuid.uuid4().hex[:12]
-    q = sinks.run_available_now(sinks.memory_sink(df, name, output_mode))
-    q.awaitTermination(120)
+    sinks.run_available_now(sinks.memory_sink(df, name, output_mode))
     return name, spark.sql(f"SELECT * FROM {name}")
 
 
@@ -39,9 +38,8 @@ def test_chapter2_file_to_window_to_sink_roundtrip(spark, tmp_path):
 
     out = tmp_path / "five_sec_summary"
     ckpt = tmp_path / "ckpt"
-    q = sinks.run_available_now(
+    sinks.run_available_now(
         sinks.file_sink(counts, str(out), str(ckpt), fmt="csv"))
-    q.awaitTermination(120)
 
     got = (spark.read.schema("window_start_ms long, cnt long")
            .csv(str(out)).collect())
@@ -308,11 +306,10 @@ def test_st2_state_carries_across_micro_batches(spark, tmp_path):
         out = stateful.action_durations_stream(stream, key="user",
                                                ts_ms="ts_ms", action_col="action")
         run_rows: list = []
-        q = (out.writeStream
-             .foreachBatch(lambda bdf, bid: run_rows.extend(bdf.collect()))
-             .outputMode("append").option("checkpointLocation", str(ckpt))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        sinks.run_available_now(
+            out.writeStream
+            .foreachBatch(lambda bdf, bid: run_rows.extend(bdf.collect()))
+            .outputMode("append").option("checkpointLocation", str(ckpt)))
         batches.append(run_rows)
 
     run_once()
@@ -355,7 +352,7 @@ def test_late_data_capture(spark, tmp_path):
              .option("checkpointLocation", str(ckpt))
              .trigger(availableNow=True).start())
         cap.bind(q)
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     # Run 1 advances the watermark to max(ts) - 2 s = base + 8000.
     (src / "a.csv").write_text(f'"u","{base}"\n"u","{base + 10_000}"\n')
@@ -394,7 +391,7 @@ def test_late_data_capture_bounded_spill(spark, tmp_path):
              .option("checkpointLocation", str(ckpt))
              .trigger(availableNow=True).start())
         cap.bind(q)
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     # Run 1 advances the watermark to base + 98_000.
     (src / "a.csv").write_text(f'"u","{base + 100_000}"\n')
@@ -442,10 +439,9 @@ def test_kafka_roundtrip_live(spark, tmp_path):
             spark, topic, **{"kafka.bootstrap.servers": broker,
                              "startingOffsets": "earliest"}).load())
     name = f"kafka_mem_{topic}"
-    q = (stream.writeStream.format("memory").queryName(name)
-         .option("checkpointLocation", str(tmp_path / "kafka_ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    sinks.run_available_now(
+        stream.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", str(tmp_path / "kafka_ckpt")))
     got = sorted(r["value"] for r in spark.table(name).collect())
     assert got == sorted(records)
 
@@ -520,8 +516,7 @@ def test_idempotent_file_sink_batch_dirs(spark, tmp_path):
     writer = sinks.idempotent_file_sink(
         stream.select("id", "user", "operation"),
         str(tmp_path / "out"), str(tmp_path / "ck"))
-    q = sinks.run_available_now(writer)
-    q.awaitTermination(120)
+    sinks.run_available_now(writer)
     back = spark.read.parquet(str(tmp_path / "out"))
     assert back.count() == 12
     assert back.select("batch_id").distinct().count() == 2  # two micro-batches
@@ -549,12 +544,11 @@ def test_windowed_agg_restart_finalizes_each_window_once(spark, tmp_path):
             T.StructField("ts_ms", T.LongType()),
         ])).withColumn("ts", F.timestamp_millis(F.col("ts_ms"))))
         counts = pipelines.tumbling_counts(stream, "ts", "5 seconds")
-        q = (counts.writeStream
-             .foreachBatch(lambda bdf, bid: emitted.extend(
-                 (r["window_start_ms"], r["cnt"]) for r in bdf.collect()))
-             .outputMode("append").option("checkpointLocation", str(ckpt))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        sinks.run_available_now(
+            counts.writeStream
+            .foreachBatch(lambda bdf, bid: emitted.extend(
+                (r["window_start_ms"], r["cnt"]) for r in bdf.collect()))
+            .outputMode("append").option("checkpointLocation", str(ckpt)))
 
     # Run 1: rows in windows [0,5s) and [5s,10s); watermark = 6s finalizes
     # only the first window.
@@ -576,7 +570,6 @@ def test_console_sink_runs(spark, tmp_path):
     generators.generate_audit_files(str(src), n=5)
     stream = sources.file_csv_stream(spark, str(src), AUDIT_TRAIL)
     q = sinks.run_available_now(sinks.console_sink(stream.select("id", "user")))
-    q.awaitTermination(60)
     assert q.lastProgress["numInputRows"] == 5
 
 
@@ -587,10 +580,9 @@ def test_log_sink_captures_rows(spark, tmp_path):
     generators.generate_audit_files(str(src), n=7)
     stream = sources.file_csv_stream(spark, str(src), AUDIT_TRAIL)
     seen: list = []
-    q = sinks.run_available_now(
+    sinks.run_available_now(
         sinks.log_sink(stream.select("id", "operation"),
                        log_fn=lambda bid, rows: seen.extend(rows)))
-    q.awaitTermination(60)
     assert len(seen) == 7
     assert {r["id"] for r in seen} == set(range(7))
 
@@ -736,10 +728,9 @@ def test_interval_alerts_tws_matches_group_state_form(spark, tmp_path):
                  match_value="del", threshold_ms=10_000,
                  order_by=["ts_ms", "event_id"])
         name = f"tws_{op.__name__}"
-        q = (out.writeStream.format("memory").queryName(name)
-             .option("checkpointLocation", str(tmp_path / f"ck_{op.__name__}"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        sinks.run_available_now(
+            out.writeStream.format("memory").queryName(name)
+            .option("checkpointLocation", str(tmp_path / f"ck_{op.__name__}")))
         return {tuple(r) for r in spark.table(name).collect()}
     assert run(interval_alerts_tws) == run(interval_alerts_stream)
 
@@ -832,9 +823,8 @@ def test_manifest_sink_commits_atomically(spark, tmp_path):
     ])
     out = str(tmp_path / "mout")
     stream = sources.file_csv_stream(spark, str(src), schema)
-    q = sinks.run_available_now(
+    sinks.run_available_now(
         sinks.manifest_file_sink(stream, out, str(tmp_path / "mckpt")))
-    q.awaitTermination(120)
 
     got = {r["event_id"] for r in sinks.read_manifest(spark, out).collect()}
     assert got == {1, 2}
@@ -1083,9 +1073,8 @@ def test_manifest_time_travel(spark, tmp_path):
     schema = T.StructType([T.StructField("v", T.LongType())])
     stream = (spark.readStream.format("csv").schema(schema)
               .option("maxFilesPerTrigger", 1).load(str(src)))
-    q = sinks.run_available_now(
+    sinks.run_available_now(
         sinks.manifest_file_sink(stream, out, str(tmp_path / "ttckpt")))
-    q.awaitTermination(120)
     full = {r["v"] for r in sinks.read_manifest(spark, out).collect()}
     assert full == {1, 2, 3}
     asof0 = {r["v"] for r in
@@ -1114,12 +1103,11 @@ def test_zscore_state_survives_checkpoint_restart(spark, tmp_path):
         out = stateful.zscore_alert_stream(stream, key="k", ts_ms="ts_ms",
                                            id_col="event_id", value_col="v",
                                            k2=4, min_obs=3)
-        q = (out.writeStream
-             .foreachBatch(lambda bdf, bid: emitted.extend(
-                 (r["ts_ms"], r["v"], r["n_prev"]) for r in bdf.collect()))
-             .outputMode("append").option("checkpointLocation", str(ckpt))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        sinks.run_available_now(
+            out.writeStream
+            .foreachBatch(lambda bdf, bid: emitted.extend(
+                (r["ts_ms"], r["v"], r["n_prev"]) for r in bdf.collect()))
+            .outputMode("append").option("checkpointLocation", str(ckpt)))
 
     # Run 1: four stable observations, no alert possible.
     (src / "a.csv").write_text(
@@ -1182,13 +1170,12 @@ def test_funnel_state_survives_checkpoint_restart(spark, tmp_path):
         ]))
         out = stateful.funnel_stream(stream, ["view", "click", "purchase"],
                                      key="user_id")
-        q = (out.writeStream
-             .foreachBatch(lambda bdf, bid: emitted.extend(
-                 (r["user_id"], r["t1_ms"], r["t2_ms"], r["t3_ms"])
-                 for r in bdf.collect()))
-             .outputMode("append").option("checkpointLocation", str(ckpt))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        sinks.run_available_now(
+            out.writeStream
+            .foreachBatch(lambda bdf, bid: emitted.extend(
+                (r["user_id"], r["t1_ms"], r["t2_ms"], r["t3_ms"])
+                for r in bdf.collect()))
+            .outputMode("append").option("checkpointLocation", str(ckpt)))
 
     (src / "a.csv").write_text(
         '"1","u","view","10"\n"2","u","click","20"\n')
@@ -1213,9 +1200,8 @@ def test_manifest_sink_replay_is_idempotent(spark, tmp_path):
     def run():
         stream = (spark.readStream.format("csv").schema(schema)
                   .load(str(src)))
-        q = sinks.run_available_now(
+        sinks.run_available_now(
             sinks.manifest_file_sink(stream, out, str(tmp_path / "mrck")))
-        q.awaitTermination(120)
 
     run()
     manifests1 = sorted(glob.glob(os.path.join(out, "_manifests", "*.json")))
@@ -1246,13 +1232,12 @@ def test_dynamic_sessions_state_survives_restart(spark, tmp_path):
                                                ts_ms="ts_ms",
                                                gap_col="gap",
                                                id_col="event_id")
-        q = (out.writeStream
-             .foreachBatch(lambda bdf, bid: emitted.extend(
-                 (r["session_start_ms"], r["n_events"], r["last_ts_ms"])
-                 for r in bdf.collect()))
-             .outputMode("append").option("checkpointLocation", str(ckpt))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        sinks.run_available_now(
+            out.writeStream
+            .foreachBatch(lambda bdf, bid: emitted.extend(
+                (r["session_start_ms"], r["n_events"], r["last_ts_ms"])
+                for r in bdf.collect()))
+            .outputMode("append").option("checkpointLocation", str(ckpt)))
 
     (src / "a.csv").write_text('"u","0","1","100"\n"u","50","2","100"\n')
     run_once()
@@ -1405,7 +1390,7 @@ def test_late_capture_engine_watermark_folds_in_across_restart(spark, tmp_path):
              .option("checkpointLocation", str(ckpt))
              .trigger(availableNow=True).start())
         cap.bind(q)
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         cap.finalize()  # fold the FINAL batch's engine watermark
 
     # Run 1, two single-file batches; the last batch's engine watermark
@@ -1447,13 +1432,12 @@ def test_attribution_state_survives_checkpoint_restart(spark, tmp_path):
             T.StructField("ts_ms", T.LongType()),
         ]))
         out = stateful.attribution_stream(stream, key="user_id")
-        q = (out.writeStream
-             .foreachBatch(lambda bdf, bid: emitted.extend(
-                 (r["user_id"], r["first_touch"], r["last_touch"])
-                 for r in bdf.collect()))
-             .outputMode("append").option("checkpointLocation", str(ckpt))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        sinks.run_available_now(
+            out.writeStream
+            .foreachBatch(lambda bdf, bid: emitted.extend(
+                (r["user_id"], r["first_touch"], r["last_touch"])
+                for r in bdf.collect()))
+            .outputMode("append").option("checkpointLocation", str(ckpt)))
 
     (src / "a.csv").write_text(
         '"1","u","view","10"\n"2","u","click","20"\n'

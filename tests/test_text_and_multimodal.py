@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import pathlib
+
 import pytest
 
 from flink_realtime_data_eng_spark.functions import multimodal, text
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 
 def _docs(spark, rows):
@@ -203,7 +207,7 @@ def test_multimodal_udfs_survive_foreign_cwd():
     import subprocess
     import sys
     code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {str(ROOT)!r})\n"
         "from pyspark.sql import SparkSession\n"
         "from flink_realtime_data_eng_spark import registry\n"
         "s = SparkSession.builder.master('local[2]')"

@@ -12,13 +12,14 @@ Usage: python tools/verify_local.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import pathlib
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from flink_realtime_data_eng_spark.session import get_spark  # noqa: E402
