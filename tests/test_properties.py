@@ -9,7 +9,7 @@ deadlines disabled — the value is randomized coverage of boundary cases
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -638,9 +638,17 @@ _AUC_ROWS = st.lists(
 
 @SLOW
 @given(rows=_AUC_ROWS)
+# 2U/(2PN) = 49/128 = 0.3828125 sits exactly on a 6-decimal tie: SQL
+# round() goes half-up to 0.382813 where Python's round() would give
+# 0.382812, so the oracle rounds the exact ratio half-up.
+@example(rows=[(1, False, 0)] * 7 + [(1, False, 1)]
+         + [(1, True, 0)] * 7 + [(1, True, -1)])
 def test_roc_auc_matches_pairwise_definition(spark, rows):
     """The rank-sum decomposition must equal the O(n²) definition
-    AUC = (#(pos>neg) + ½#(ties)) / (P·N) on any frame, ties included."""
+    AUC = (#(pos>neg) + ½#(ties)) / (P·N) on any frame, ties included;
+    auc6 is that exact ratio rounded half-up (SQL round) to 6 places."""
+    from fractions import Fraction
+    import math
     from flink_realtime_data_eng_spark.operators import stats
     df = spark.createDataFrame(
         [(f"g{g}", y, s) for g, y, s in rows],
@@ -658,7 +666,8 @@ def test_roc_auc_matches_pairwise_definition(spark, rows):
         n_pos, n_neg, got_u2, auc6 = got[src]
         assert (n_pos, n_neg, got_u2) == (len(pos), len(neg), u2)
         if pos and neg:
-            assert auc6 == round(u2 / (2 * len(pos) * len(neg)), 6)
+            exact = Fraction(u2, 2 * len(pos) * len(neg))
+            assert auc6 == math.floor(exact * 10**6 + Fraction(1, 2)) / 10**6
         else:
             assert auc6 is None
 
